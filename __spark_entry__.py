@@ -3016,65 +3016,56 @@ def _weighted_sample_es(spark, sf):
 
 def _bpe_merges(spark, sf):
     """BPE merge learning (Sennrich 2016): 8 merges over the corpus
-    word-frequency relation (operators/bpe.py). r12: runs the
-    collected-chain learner — ONE distributed corpus pass + the
-    driver-side incremental learner over the Heaps-bounded vocabulary
-    (the bpe_merges64 shape; the in-DAG per-step chain cost 44 driver
-    jobs of AQE stage materialization for vocabulary-sized data and
-    keeps its pinned-equality pytest coverage). Output is identical —
-    the same unrolled-CTE island-parity oracle hash-certifies the
-    learned chain step for step."""
-    from model_audit_spark.operators.bpe import learn_bpe_merges_collected
+    word-frequency relation (bpe.learn_bpe_merges) — ONE distributed
+    corpus pass, then the driver-side incremental learner over the
+    measured, Heaps-bounded vocabulary (the distributed loop takes over
+    above the vocabulary-size gate). The unrolled-CTE island-parity
+    oracle hash-certifies the learned chain step for step."""
+    from model_audit_spark.operators.bpe import learn_bpe_merges
 
     docs = _t(spark, sf, "documents")
-    return learn_bpe_merges_collected(docs, n_merges=8, memo_key=sf)
+    return learn_bpe_merges(docs, n_merges=8, memo_key=sf)
 
 
 def _bpe_segments(spark, sf):
     """The application half of BPE: how the 8 learned merges segment the
     200 most frequent corpus words, with per-word fertility — same
-    unrolled-CTE oracle chain, final vocabulary state. r12: the
-    collected-chain shape (bpe.bpe_vocab_segments_collected) — the
-    chain is learned driver-side (memo-shared with bpe_merges in a
-    session batch) and applied as 8 literal apply_merge folds in one
-    projection; output identical (equality pinned in tests)."""
-    from model_audit_spark.operators.bpe import (
-        bpe_vocab_segments_collected,
-    )
+    unrolled-CTE oracle chain, final vocabulary state
+    (bpe.bpe_vocab_segments). The chain is learned driver-side
+    (memo-shared with bpe_merges in a session batch) and applied as 8
+    literal apply_merge folds in one projection."""
+    from model_audit_spark.operators.bpe import bpe_vocab_segments
 
     docs = _t(spark, sf, "documents")
-    return bpe_vocab_segments_collected(
-        docs, n_merges=8, top_k=200, memo_key=sf
-    )
+    return bpe_vocab_segments(docs, n_merges=8, top_k=200, memo_key=sf)
 
 
 def _bpe_merges64(spark, sf):
-    """BPE at production merge counts (r6): collected-vocabulary shape
-    (bpe.learn_bpe_merges_collected) — ONE distributed corpus pass
-    collapses to the Heaps-bounded (word, freq) relation, then an
-    incremental driver-side Sennrich learner runs all 64 steps in a
-    single job instead of 64 sequential driver-argmax actions (pure
-    scheduling latency at any data size; the r5 perf finding). The
-    oracle still unrolls all 64 steps as MATERIALIZED CTEs, so the full
-    chain stays hash-certified step by step; the memo key lets
+    """BPE at production merge counts (r6, bpe.learn_bpe_merges): ONE
+    distributed corpus pass collapses to the Heaps-bounded (word, freq)
+    relation, then an incremental driver-side Sennrich learner runs all
+    64 steps in a single job instead of 64 sequential per-step actions
+    (pure scheduling latency at any data size; the r5 perf finding).
+    The oracle still unrolls all 64 steps as MATERIALIZED CTEs, so the
+    full chain stays hash-certified step by step; the memo key lets
     bpe_fertility64 reuse this chain within one session batch."""
-    from model_audit_spark.operators.bpe import learn_bpe_merges_collected
+    from model_audit_spark.operators.bpe import learn_bpe_merges
 
     docs = _t(spark, sf, "documents")
-    return learn_bpe_merges_collected(docs, n_merges=64, memo_key=sf)
+    return learn_bpe_merges(docs, n_merges=64, memo_key=sf)
 
 
 def _bpe_fertility64(spark, sf):
     """Final-state certificate of the 64-merge chain: exact vocabulary
     totals + freq-weighted mean fertility (tokens per word — the number
-    that prices training compute) in one row
-    (bpe.bpe_fertility_collected). Shares bpe_merges64's learned chain
-    through the persistence.memo_obj key instead of re-learning all 64
-    steps (the r5 duplicate-work finding)."""
-    from model_audit_spark.operators.bpe import bpe_fertility_collected
+    that prices training compute) in one row (bpe.bpe_fertility).
+    Shares bpe_merges64's learned chain through the persistence.memo_obj
+    key instead of re-learning all 64 steps (the r5 duplicate-work
+    finding)."""
+    from model_audit_spark.operators.bpe import bpe_fertility
 
     docs = _t(spark, sf, "documents")
-    return bpe_fertility_collected(docs, n_merges=64, memo_key=sf)
+    return bpe_fertility(docs, n_merges=64, memo_key=sf)
 
 
 def _events_decayed(spark, sf):
@@ -3833,63 +3824,62 @@ def _burstiness_profile(spark, sf):
 # and groups memo-sharing families adjacently (the communities trio,
 # the shingle/verified dup-graph family, the BPE pair) so a driver
 # session executing the window in order reuses the session memos.
-# Round-7 rotation, regenerated on the CLOSING tree (the end-of-round
-# step the r6 verdict mandated): the 15 queries the r6 ledger marked
-# MISPLACED plus the 9 whose closures r7's own scale work re-staled
-# (the knn_graph/LSH plane-policy derivation and the winnow_pairs
-# fractional df cap touch the similarity/winnow closures) head the
+# Current rotation, regenerated on the closing tree of the single-BPE-
+# learner change: the 21 queries whose closures it re-staled (the BPE
+# entry points, the concurrent cache-fill helper's callers, the
+# style-scoring docstrings, session_paths' max_steps check) head the
 # window; opportunistic refreshes fill the remaining slots.
 _CHECK_WINDOW = [
-    "embedding_contamination_windowed",
-    "audit_verdict_sources",
-    "dli_compare_sources",
-    "ann_ivf_sq8",
-    "ann_ivf_topk",
-    "ann_lsh_multiprobe",
-    "ann_lsh_topk",
+    "probe_style_consistency",
+    "style_fingerprint",
+    "verify_sources",
+    "detect_distribution",
+    "style_count_distribution",
+    "style_scores_long",
     "ann_param_sweep",
-    "ann_pq_rerank",
-    "ann_pq_topk",
     "ann_recall_report",
+    "audit_consistency_rate",
+    "audit_verdict_sources",
+    "benchmark_accuracy",
+    "benchmark_accuracy_by_class",
+    "benchmark_detect",
     "bpe_merges64",
     "bpe_fertility64",
     "bpe_merges",
     "bpe_segments",
-    "cluster_quality",
-    "cluster_topics",
-    "dedup_containment",
-    "dedup_jaccard_prefix",
     "dedup_recall_report",
-    "knn_triangles",
-    "pagerank_dupgraph",
-    "dedup_kcore",
-    "dedup_communities",
-    "community_modularity",
-    "community_source_nmi",
-    "contrastive_triplets",
-    "embedding_contamination",
-    "embedding_near_dups",
-    "ivf_append",
-    "kmeans_clusters",
-    "knn_graph",
-    "knn_graph_windowed",
-    "link_prediction_aa",
-    "semantic_dedup",
-    "session_paths",
-    "vocab_coverage",
-    "zipf_slope",
-    "audit_consistency_rate",
-    "benchmark_accuracy",
-    "benchmark_accuracy_by_class",
-    "benchmark_detect",
-    "cka_labels",
-    "claimed_families",
-    "corpus_sample",
-    "dedup_exact",
     "detect_documents",
-    "doc_fingerprints",
-    "events_rollup_cascade",
-    "interarrival_profile",
+    "dli_compare_sources",
+    "session_paths",
+    "length_outliers",
+    "length_percentiles",
+    "length_quantiles_exact",
+    "llmmap_compare_sources",
+    "llmmap_features_documents",
+    "llmmap_fingerprint_hashes",
+    "media_profile",
+    "mixing_plan",
+    "probe_category_counts",
+    "probes_filtered",
+    "weighted_sample_es",
+    "ann_sq8_rerank",
+    "ann_sq8_topk",
+    "conversation_transcripts",
+    "doc_chunks",
+    "embedding_dim_stats",
+    "events_pivot",
+    "label_separation",
+    "length_bucketed_batches",
+    "memorization_average",
+    "memorization_levenshtein",
+    "memorization_verbatim",
+    "pack_chunks",
+    "paragraph_dedup",
+    "phrase_search",
+    "pii_scan",
+    "q_events_asof",
+    "q_events_range_join",
+    "q_events_sessionize",
 ]
 
 

@@ -16,22 +16,19 @@ characters); then per merge step
 and emit the merge table (step, left, right, pair_count) — the actual
 artifact a BPE tokenizer ships.
 
-Scale shape: after the word-count aggregate, every step touches only
-the vocabulary relation (|V| rows, ≪ corpus; Zipf makes it nearly
-corpus-size-independent). Pair counting is one explode + hash aggregate
-over it; the rewrite is a pure per-row fold (F.aggregate). Two argmax
-shapes (identical output, both hash-certified by the same SQL twin):
-the in-DAG chain (_merge_chain — 1-row min_by aggregate broadcast into
-the rewrite; fully lazy, composes into larger plans) and the
-driver-argmax loop (_merge_chain_driver — the winning pair returns to
-the driver, the rewrite is a literal projection, checkpoints every few
-steps; ~2x faster per step, the shape for production merge counts).
-Each step's vocabulary localCheckpoints so Catalyst sees a bounded
-plan. In the in-DAG chain the checkpoints are EAGER (r12): the step
-broadcast racing the scheduler over an un-materialized lazy checkpoint
-is a live JVM deadlock (persistence.lazy_checkpoint_scope documents the
-lock ordering); the driver-argmax loop keeps lazy checkpoints because
-its per-step `.first()` is the single-threaded materializing action.
+Scale shape: one learner behind a measured size gate. The
+word-frequency relation is persisted and COUNTED first (_gated_wf).
+At or below `collect_max_rows` rows (default 20M,
+$SPARK_GRAFT_BPE_COLLECT_MAX) it is collected — the vocabulary is
+Heaps-bounded, ≪ corpus — and the whole chain is learned driver-side
+by an incremental heap learner (_learn_merges_py) in ONE Spark job.
+Above the gate the chain runs distributed over the cached vocabulary
+(_merge_loop): per step one pair-count aggregate whose single winning
+row returns to the driver, then a literal-parameterized apply_merge
+projection; a lazy localCheckpoint every _CKPT_EVERY steps keeps the
+plan bounded, and each step's `.first()` is the single-threaded
+action that materializes it. Both branches emit identical output
+(pinned in tests with collect_max_rows=1 forcing the fallback).
 
 Determinism: pair counts are exact integers; the argmax's
 (count desc, left asc, right asc) tuple is unique; the left-to-right
@@ -51,13 +48,15 @@ __all__ = [
     "word_freqs",
     "apply_merge",
     "learn_bpe_merges",
-    "learn_bpe_merges_driver",
-    "learn_bpe_merges_collected",
     "bpe_vocab_segments",
-    "bpe_vocab_segments_collected",
     "bpe_fertility",
-    "bpe_fertility_collected",
 ]
+
+MERGE_SCHEMA = "step INT, left STRING, right STRING, pair_count LONG"
+
+# distributed loop: steps between lazy vocabulary checkpoints (a
+# projection chain between checkpoints is re-analyzed, not re-shuffled)
+_CKPT_EVERY = 6
 
 
 def word_freqs(
@@ -125,313 +124,6 @@ def apply_merge(seq: Column, left: Column, right: Column) -> Column:
     )
 
 
-def _merge_chain(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str,
-    min_pair_count: int,
-) -> tuple[list[DataFrame], DataFrame]:
-    """Run the merge loop; return (per-step 1-row merge relations, final
-    vocabulary relation (word, seq, freq))."""
-    # EAGER checkpoints throughout this in-DAG chain (r12): each step
-    # broadcasts best1 — a subtree over the previous vocabulary — and a
-    # broadcast-exchange thread computing an UN-materialized lazy
-    # checkpoint deadlocks against the DAG scheduler (the pagerank
-    # deadlock, persistence.lazy_checkpoint_scope). Eager materializes
-    # each step's vocab from the driver thread before any broadcast can
-    # touch it. The bench/gate paths use the collected learner; this
-    # chain is the fully-lazy-composition variant.
-    vocab = word_freqs(df, text_col).select(
-        "word", F.split(F.col("word"), "").alias("seq"), "freq"
-    ).localCheckpoint()
-
-    merge_rows = []
-    for step_no in range(1, n_merges + 1):
-        pairs = (
-            vocab.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(slice(seq, 1, size(seq) - 1), "
-                        "(s, i) -> struct(s as l, seq[i + 1] as r))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-            .filter(F.col("cnt") >= min_pair_count)
-        )
-        # in-DAG argmax in ONE aggregate (r5; replaces the r4
-        # orderBy-limit + 1-row-range join): min_by over the sortable
-        # struct (-cnt, l, r) encodes (count desc, left asc, right asc)
-        # directly — negating the count is legal (exact BIGINT), string
-        # asc order rides the struct comparison. A global agg always
-        # emits exactly one row (null fields when exhausted), so the
-        # null-safe range(1) join disappears — one fewer join + exchange
-        # per merge step.
-        best1 = (
-            pairs.agg(
-                F.min_by(
-                    F.struct(F.col("l"), F.col("r"), F.col("cnt")),
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"),
-                        F.col("l"),
-                        F.col("r"),
-                    ),
-                ).alias("b")
-            )
-            .select(
-                F.col("b.l").alias("_bl"),
-                F.col("b.r").alias("_br"),
-                F.col("b.cnt").alias("_bc"),
-            )
-        )
-        merge_rows.append(
-            best1.filter(F.col("_bl").isNotNull()).select(
-                F.lit(step_no).cast("int").alias("step"),
-                F.col("_bl").alias("left"),
-                F.col("_br").alias("right"),
-                F.col("_bc").alias("pair_count"),
-            )
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best1))
-            .select(
-                "word",
-                apply_merge(
-                    F.col("seq"), F.col("_bl"), F.col("_br")
-                ).alias("seq"),
-                "freq",
-            )
-            .localCheckpoint()
-        )
-    return merge_rows, vocab
-
-
-def learn_bpe_merges(
-    df: DataFrame,
-    n_merges: int = 6,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-) -> DataFrame:
-    """(step, left, right, pair_count): the first `n_merges` BPE merges
-    learned from the corpus (step 1-based). Stops early (emits fewer
-    rows) when no adjacent pair reaches `min_pair_count` — mirrored in
-    the SQL twin, so early exhaustion is hash-checked too."""
-    if n_merges <= 0:
-        return df.sparkSession.createDataFrame(
-            [], "step INT, left STRING, right STRING, pair_count LONG"
-        )
-    merge_rows, _ = _merge_chain(df, n_merges, text_col, min_pair_count)
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionByName(m)
-    return out
-
-
-def bpe_vocab_segments(
-    df: DataFrame,
-    n_merges: int = 6,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    top_k: int | None = None,
-) -> DataFrame:
-    """(word, freq, segments, n_subwords): the APPLICATION half of BPE —
-    how the learned merges segment every corpus word, i.e. the actual
-    subword tokenization plus the per-word fertility (n_subwords; its
-    freq-weighted mean is the tokenizer-fertility metric that prices
-    training compute). `top_k` bounds output to the most frequent words
-    ((freq desc, word asc) — deterministic)."""
-    _, vocab = _merge_chain(df, n_merges, text_col, min_pair_count)
-    out = vocab.select(
-        "word",
-        "freq",
-        F.array_join("seq", " ").alias("segments"),
-        F.size("seq").cast("int").alias("n_subwords"),
-    )
-    if top_k is not None:
-        out = out.orderBy(
-            F.desc("freq"), F.asc("word")
-        ).limit(int(top_k))
-    return out
-
-
-def bpe_vocab_segments_collected(
-    df: DataFrame,
-    n_merges: int = 6,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    top_k: int | None = None,
-    memo_key=None,
-    collect_max_rows: int | None = None,
-) -> DataFrame:
-    """bpe_vocab_segments in the collected-chain shape (r12): the merge
-    chain is learned driver-side over the collapsed vocabulary
-    (_collected_chain — ONE corpus pass; memo-shared with
-    learn_bpe_merges_collected when `memo_key` matches), then applied
-    as n_merges LITERAL apply_merge folds in one projection — no
-    per-step broadcast joins, no per-step checkpoints, no per-step AQE
-    stage materialization. Output is identical to bpe_vocab_segments:
-    the learned chain is pinned equal across all three learner shapes,
-    and composing the same ordered rewrites over the same initial
-    character sequences is exactly what the in-DAG chain's per-step
-    vocab rewrite computes (equality pinned in tests; the same
-    unrolled-CTE oracle twin hash-certifies both). Vocabulary-size
-    gated like learn_bpe_merges_collected (r13): above
-    `collect_max_rows` the chain is learned by the distributed
-    driver-argmax loop and its final vocabulary IS the segmentation —
-    identical output either path."""
-    # ONE corpus pass: the persisted word-frequency relation feeds the
-    # gating count, the learner's collect (or the fallback loop) AND
-    # the segmentation projection
-    wf, fits = _gated_wf(df, text_col, collect_max_rows)
-    if not fits:
-        _merges, vocab = _merge_chain_driver(
-            df, n_merges, text_col, min_pair_count, wf=wf
-        )
-        out = vocab.select(
-            "word",
-            "freq",
-            F.array_join("seq", " ").alias("segments"),
-            F.size("seq").cast("int").alias("n_subwords"),
-        )
-        if top_k is not None:
-            out = out.orderBy(
-                F.desc("freq"), F.asc("word")
-            ).limit(int(top_k))
-        return out
-    merges, _, _, _ = _collected_chain(
-        df, n_merges, text_col, min_pair_count, memo_key, wf=wf
-    )
-    vocab = wf.select(
-        "word", F.split(F.col("word"), "").alias("seq"), "freq"
-    )
-    seq = F.col("seq")
-    for _step, left, right, _cnt in merges:
-        seq = apply_merge(seq, F.lit(left), F.lit(right))
-    out = vocab.select(
-        "word",
-        "freq",
-        F.array_join(seq, " ").alias("segments"),
-        F.size(seq).cast("int").alias("n_subwords"),
-    )
-    if top_k is not None:
-        out = out.orderBy(
-            F.desc("freq"), F.asc("word")
-        ).limit(int(top_k))
-    return out
-
-
-MERGE_SCHEMA = "step INT, left STRING, right STRING, pair_count LONG"
-
-
-def _merge_chain_driver(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str,
-    min_pair_count: int,
-    ckpt_every: int = 6,
-    vocab_partitions: int | None = None,
-    wf: DataFrame | None = None,
-) -> tuple[list[tuple], DataFrame]:
-    """Driver-argmax merge loop (r5): per step, the winning pair comes
-    back to the driver as ONE row (the same O(rounds) tiny-action
-    discipline as pagerank's convergence count, cluster.py) and the
-    rewrite becomes a LITERAL-parameterized projection — no broadcast
-    exchange, no join, and checkpoints only every `ckpt_every` steps
-    (a projection chain between checkpoints is re-analyzed, not
-    re-shuffled). At 64 merges this halves wall-clock vs the in-DAG
-    chain (measured 14.7 s vs 29 s, sf0.1 local[32]).
-
-    Trade-off vs _merge_chain (in-DAG): 1 driver round-trip per step —
-    O(n_merges) blocking actions, each returning 24 bytes — versus one
-    broadcast-join exchange per step. At any scale the rewrites between
-    checkpoints re-evaluate ≤ ckpt_every-1 fold layers during the next
-    step's aggregate; vocabulary-sized, no extra shuffle. Early
-    exhaustion exits the loop directly (the driver sees the null row),
-    so no null-safe plumbing survives into the plan.
-
-    `vocab_partitions` coalesces the vocabulary relation once after the
-    corpus-sized word-count aggregate — on a toy fixture 1 partition
-    kills per-step scheduling overhead; at real scale leave None (the
-    vocabulary keeps the aggregate's AQE-coalesced layout).
-
-    `wf`: an already-built (word, freq) relation (typically the
-    persisted one the vocabulary-size gate counted) so the fallback
-    path reuses its cached blocks instead of re-aggregating the
-    corpus."""
-    vocab = (
-        wf if wf is not None else word_freqs(df, text_col)
-    ).select(
-        "word", F.split(F.col("word"), "").alias("seq"), "freq"
-    )
-    if vocab_partitions:
-        vocab = vocab.coalesce(vocab_partitions)
-    vocab = vocab.localCheckpoint(eager=False)
-    merges: list[tuple] = []
-    for step_no in range(1, n_merges + 1):
-        best = (
-            vocab.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(slice(seq, 1, size(seq) - 1), "
-                        "(s, i) -> struct(s as l, seq[i + 1] as r))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-            .filter(F.col("cnt") >= min_pair_count)
-            .agg(
-                F.min_by(
-                    F.struct(F.col("l"), F.col("r"), F.col("cnt")),
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"),
-                        F.col("l"),
-                        F.col("r"),
-                    ),
-                ).alias("b")
-            )
-            .select("b.l", "b.r", "b.cnt")
-        ).first()
-        if best is None or best["l"] is None:
-            break
-        merges.append(
-            (step_no, best["l"], best["r"], int(best["cnt"]))
-        )
-        vocab = vocab.select(
-            "word",
-            apply_merge(
-                F.col("seq"), F.lit(best["l"]), F.lit(best["r"])
-            ).alias("seq"),
-            "freq",
-        )
-        if step_no % ckpt_every == 0:
-            vocab = vocab.localCheckpoint(eager=False)
-    return merges, vocab
-
-
-def learn_bpe_merges_driver(
-    df: DataFrame,
-    n_merges: int = 64,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    ckpt_every: int = 6,
-    vocab_partitions: int | None = None,
-) -> DataFrame:
-    """learn_bpe_merges at production merge counts: identical output
-    (equality pinned in tests and by the shared hash oracle — the SQL
-    twin certifies BOTH implementations), driver-argmax loop shape.
-    Use this for n_merges ≳ 16; the in-DAG variant for fully-lazy
-    composition."""
-    merges, _ = _merge_chain_driver(
-        df, n_merges, text_col, min_pair_count, ckpt_every,
-        vocab_partitions,
-    )
-    return df.sparkSession.createDataFrame(merges, MERGE_SCHEMA)
-
-
 def _rewrite_py(seq: list[str], left: str, right: str) -> list[str]:
     """Greedy left-to-right non-overlapping rewrite — the Python twin
     of apply_merge's fold ('l l l' with (l,l) -> ['ll','l'])."""
@@ -457,8 +149,8 @@ def _learn_merges_py(
     CONTAIN the winning pair (the original learn_bpe optimization) —
     total work is O(affected symbols), not O(|V| · n_merges).
 
-    Semantics are bit-identical to the distributed chain (and therefore
-    to the unrolled SQL twin): adjacent pairs are POSITION-counted
+    Semantics are bit-identical to _merge_loop (and therefore to the
+    unrolled SQL twin): adjacent pairs are POSITION-counted
     (overlaps included, matching the transform-slice enumerator),
     the argmax order is (count desc, left asc, right asc) — the heap
     key (-count, left, right) encodes it directly, and Python's
@@ -532,16 +224,16 @@ def _learn_merges_py(
 
 
 def _collect_max_rows(override: int | None = None) -> int:
-    """Vocabulary-row ceiling for the collected-chain learner (r13,
-    VERDICT #4). Above this, the collected shape would pull an
-    unbounded relation to the driver — at 100 TB of noisy text the
+    """Vocabulary-row ceiling for the driver-side learner (r13,
+    VERDICT #4). Above this, collecting would pull an unbounded
+    relation to the driver — at 100 TB of noisy text the
     "Heaps-bounded" vocabulary can plausibly reach 1e8+ rows and OOM
-    the driver — so the public *_collected entry points COUNT the
-    word-frequency relation first and fall back to the distributed
-    driver-argmax loop (1 row per step to the driver) when it exceeds
-    this. Default 20M rows ≈ a few GB of driver working set for the
-    Python learner (collect + char-seq index); override per call or
-    via $SPARK_GRAFT_BPE_COLLECT_MAX for bigger drivers."""
+    the driver — so the public entry points COUNT the word-frequency
+    relation first and fall back to the distributed loop (1 row per
+    step to the driver) when it exceeds this. Default 20M rows ≈ a few
+    GB of driver working set for the Python learner (collect +
+    char-seq index); override per call or via
+    $SPARK_GRAFT_BPE_COLLECT_MAX for bigger drivers."""
     if override is not None:
         return int(override)
     import os
@@ -555,49 +247,44 @@ def _gated_wf(
     df: DataFrame,
     text_col: str,
     collect_max_rows: int | None,
-    wf: DataFrame | None = None,
 ) -> tuple[DataFrame, bool]:
-    """(persisted word-frequency relation, fits_driver): the shared
+    """(persisted word-frequency relation, fits on the driver): the shared
     vocabulary-size gate. ONE corpus pass: the persist is filled by the
-    gating count(), and both the collected learner's collect() and any
+    gating count(), and both the heap learner's collect() and the
     fallback loop then scan cached vocabulary-sized blocks."""
     from model_audit_spark.persistence import track
 
-    if wf is None:
-        wf = track(word_freqs(df, text_col).persist())
+    wf = track(word_freqs(df, text_col).persist())
     return wf, wf.count() <= _collect_max_rows(collect_max_rows)
 
 
-def _collected_chain(
-    df: DataFrame,
+def _heap_chain(
+    wf: DataFrame,
     n_merges: int,
     text_col: str,
     min_pair_count: int,
     memo_key=None,
-    wf: DataFrame | None = None,
 ) -> tuple[list[tuple], int, int, int]:
-    """Distributed corpus collapse + bounded-relation driver learner.
+    """Collect the (word, freq) relation and learn the chain
+    driver-side (_learn_merges_py).
 
-    The ONLY corpus-sized work is the word_freqs aggregate; the
-    vocabulary it emits is Heaps-law bounded (~1e6-1e7 rows at 100 TB,
-    tens of MB as (word, freq) pairs), so collecting it is the same
-    bounded-collect discipline as the k-means centroid and PQ codebook
-    collects (similarity.py) — and learning merges over the collapsed
-    relation driver-side is how production tokenizer trainers work.
-    This replaces 64 sequential Spark jobs (pure scheduling latency at
-    any data size — the per-step DATA is vocabulary-sized) with one.
+    The vocabulary is Heaps-law bounded (~1e6-1e7 rows at 100 TB, tens
+    of MB as (word, freq) pairs) and _gated_wf has measured it, so the
+    collect is the same bounded-collect discipline as the k-means
+    centroid and PQ codebook collects (similarity.py) — and learning
+    merges over the collapsed relation driver-side is how production
+    tokenizer trainers work. One job replaces n_merges sequential
+    Spark jobs (pure scheduling latency at any data size — the
+    per-step DATA is vocabulary-sized).
 
     `memo_key`: when set, the learned chain is memoized via
     persistence.memo_obj keyed (table-key, n_merges, text_col,
-    min_pair_count), so bpe_fertility_collected reuses the chain
-    learn_bpe_merges_collected already ran in the same session batch;
+    min_pair_count), so bpe_fertility reuses the chain
+    learn_bpe_merges already learned in the same session batch;
     release_all() (the bench isolation hook) clears it."""
     def build():
-        rows = (
-            wf if wf is not None else word_freqs(df, text_col)
-        ).collect()
         return _learn_merges_py(
-            [(r["word"], r["freq"]) for r in rows],
+            [(r["word"], r["freq"]) for r in wf.collect()],
             n_merges,
             min_pair_count,
         )
@@ -612,7 +299,72 @@ def _collected_chain(
     )
 
 
-def learn_bpe_merges_collected(
+def _merge_loop(
+    wf: DataFrame, n_merges: int, min_pair_count: int
+) -> tuple[list[tuple], DataFrame]:
+    """Distributed merge loop over the cached (word, freq) relation —
+    the path above the vocabulary-size gate. Per step the winning pair
+    comes back to the driver as ONE row (the same O(rounds) tiny-action
+    discipline as pagerank's convergence count, cluster.py) and the
+    rewrite becomes a LITERAL-parameterized projection — no broadcast
+    exchange, no join. Rewrites between checkpoints re-evaluate at most
+    _CKPT_EVERY-1 fold layers during the next step's aggregate;
+    vocabulary-sized, no extra shuffle. Early exhaustion exits the loop
+    directly (the driver sees the null row).
+
+    Returns (merge rows, final vocabulary (word, seq, freq))."""
+    vocab = wf.select(
+        "word", F.split(F.col("word"), "").alias("seq"), "freq"
+    ).localCheckpoint(eager=False)
+    merges: list[tuple] = []
+    for step_no in range(1, n_merges + 1):
+        best = (
+            vocab.select(
+                "freq",
+                F.explode(
+                    F.expr(
+                        "transform(slice(seq, 1, size(seq) - 1), "
+                        "(s, i) -> struct(s as l, seq[i + 1] as r))"
+                    )
+                ).alias("p"),
+            )
+            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+            .agg(F.sum("freq").cast("long").alias("cnt"))
+            .filter(F.col("cnt") >= min_pair_count)
+            # min_by over the sortable struct (-cnt, l, r) encodes
+            # (count desc, left asc, right asc) in ONE aggregate; a
+            # global agg always emits one row (null fields when
+            # exhausted)
+            .agg(
+                F.min_by(
+                    F.struct(F.col("l"), F.col("r"), F.col("cnt")),
+                    F.struct(
+                        (-F.col("cnt")).alias("nc"),
+                        F.col("l"),
+                        F.col("r"),
+                    ),
+                ).alias("b")
+            )
+            .select("b.l", "b.r", "b.cnt")
+        ).first()
+        if best is None or best["l"] is None:
+            break
+        merges.append(
+            (step_no, best["l"], best["r"], int(best["cnt"]))
+        )
+        vocab = vocab.select(
+            "word",
+            apply_merge(
+                F.col("seq"), F.lit(best["l"]), F.lit(best["r"])
+            ).alias("seq"),
+            "freq",
+        )
+        if step_no % _CKPT_EVERY == 0:
+            vocab = vocab.localCheckpoint(eager=False)
+    return merges, vocab
+
+
+def learn_bpe_merges(
     df: DataFrame,
     n_merges: int = 64,
     text_col: str = "text",
@@ -620,98 +372,72 @@ def learn_bpe_merges_collected(
     memo_key=None,
     collect_max_rows: int | None = None,
 ) -> DataFrame:
-    """learn_bpe_merges at production merge counts, collected-vocabulary
-    shape: identical output to the in-DAG and driver-argmax variants
-    (equality pinned in tests; the same SQL twin hash-certifies all
-    three), one distributed corpus pass + a driver-side incremental
-    learner over the Heaps-bounded vocabulary.
+    """(step, left, right, pair_count): the first `n_merges` BPE merges
+    learned from the corpus (step 1-based). Stops early (emits fewer
+    rows) when no adjacent pair reaches `min_pair_count` — mirrored in
+    the SQL twin, so early exhaustion is hash-checked too.
 
-    r13 (VERDICT #4): the "fits the driver" decision is now MEASURED,
-    not assumed — the word-frequency relation is persisted and counted
-    first, and above `collect_max_rows` (default 20M, see
-    _collect_max_rows) the query falls back to the distributed
-    driver-argmax loop (learn_bpe_merges_driver's shape, reusing the
-    counted relation's cached blocks; 1 row per merge step to the
-    driver) instead of collecting an unbounded vocabulary."""
+    The "fits the driver" decision is MEASURED (r13, VERDICT #4): the
+    word-frequency relation is persisted and counted first; at or below
+    `collect_max_rows` (default 20M, see _collect_max_rows) the heap
+    learner runs over the collected vocabulary, above it the
+    distributed loop runs over the counted relation's cached blocks.
+    `memo_key` shares the learned chain with bpe_fertility (see
+    _heap_chain)."""
     wf, fits = _gated_wf(df, text_col, collect_max_rows)
-    if not fits:
-        merges, _ = _merge_chain_driver(
-            df, n_merges, text_col, min_pair_count, wf=wf
-        )
-        return df.sparkSession.createDataFrame(merges, MERGE_SCHEMA)
-    merges, _, _, _ = _collected_chain(
-        df, n_merges, text_col, min_pair_count, memo_key, wf=wf
-    )
+    if fits:
+        merges = _heap_chain(
+            wf, n_merges, text_col, min_pair_count, memo_key
+        )[0]
+    else:
+        merges, _ = _merge_loop(wf, n_merges, min_pair_count)
     return df.sparkSession.createDataFrame(merges, MERGE_SCHEMA)
 
 
-def bpe_fertility_collected(
+def bpe_vocab_segments(
     df: DataFrame,
     n_merges: int = 64,
     text_col: str = "text",
     min_pair_count: int = 2,
+    top_k: int | None = None,
     memo_key=None,
     collect_max_rows: int | None = None,
 ) -> DataFrame:
-    """bpe_fertility in the collected-vocabulary shape — same one-row
-    final-state certificate, computed from the SAME learned chain as
-    learn_bpe_merges_collected when `memo_key` matches (the chain is a
-    deterministic function of (table, n_merges); re-learning it was the
-    r5 perf finding). The division/round runs through the same Spark
-    expression as the distributed variant so rounding is
-    engine-identical. Vocabulary-size gated like
-    learn_bpe_merges_collected (r13): above `collect_max_rows` the
-    certificate computes through the distributed driver-argmax loop
-    over the counted relation's cached blocks — identical output
-    (the final aggregate IS bpe_fertility's)."""
+    """(word, freq, segments, n_subwords): the APPLICATION half of BPE —
+    how the learned merges segment every corpus word, i.e. the actual
+    subword tokenization plus the per-word fertility (n_subwords; its
+    freq-weighted mean is the tokenizer-fertility metric that prices
+    training compute). `top_k` bounds output to the most frequent words
+    ((freq desc, word asc) — deterministic).
+
+    Gated like learn_bpe_merges. Below the gate the driver-learned
+    chain is applied as n_merges LITERAL apply_merge folds in one
+    projection over the persisted word-frequency relation — no per-step
+    jobs; above it the distributed loop's final vocabulary IS the
+    segmentation. Composing the same ordered rewrites over the same
+    initial character sequences gives identical output either way."""
     wf, fits = _gated_wf(df, text_col, collect_max_rows)
-    if not fits:
-        merges_l, vocab = _merge_chain_driver(
-            df, n_merges, text_col, min_pair_count, wf=wf
-        )
-        return (
-            vocab.agg(
-                F.count(F.lit(1)).cast("long").alias("n_words"),
-                F.sum("freq").cast("long").alias("total_freq"),
-                F.sum(F.size("seq") * F.col("freq"))
-                .cast("long")
-                .alias("total_subwords"),
-            )
-            .select(
-                F.lit(len(merges_l)).cast("int").alias("n_merges_done"),
-                "n_words",
-                "total_freq",
-                "total_subwords",
-                F.round(
-                    F.col("total_subwords")
-                    / F.greatest(F.col("total_freq"), F.lit(1)),
-                    6,
-                ).alias("mean_fertility"),
-            )
-        )
-    merges, n_words, total_freq, total_subwords = _collected_chain(
-        df, n_merges, text_col, min_pair_count, memo_key, wf=wf
+    if fits:
+        merges = _heap_chain(
+            wf, n_merges, text_col, min_pair_count, memo_key
+        )[0]
+        seq = F.split(F.col("word"), "")
+        for _step, left, right, _cnt in merges:
+            seq = apply_merge(seq, F.lit(left), F.lit(right))
+        vocab = wf.select("word", seq.alias("seq"), "freq")
+    else:
+        _, vocab = _merge_loop(wf, n_merges, min_pair_count)
+    out = vocab.select(
+        "word",
+        "freq",
+        F.array_join("seq", " ").alias("segments"),
+        F.size("seq").cast("int").alias("n_subwords"),
     )
-    if n_words == 0:
-        # empty corpus: match the distributed shape exactly — SQL
-        # sum() over zero rows is NULL, not 0 (DETERMINISM.md rule 7)
-        total_freq = total_subwords = None
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(len(merges), n_words, total_freq, total_subwords)],
-        "n_merges_done INT, n_words LONG, total_freq LONG, "
-        "total_subwords LONG",
-    ).select(
-        "n_merges_done",
-        "n_words",
-        "total_freq",
-        "total_subwords",
-        F.round(
-            F.col("total_subwords")
-            / F.greatest(F.col("total_freq"), F.lit(1)),
-            6,
-        ).alias("mean_fertility"),
-    )
+    if top_k is not None:
+        out = out.orderBy(
+            F.desc("freq"), F.asc("word")
+        ).limit(int(top_k))
+    return out
 
 
 def bpe_fertility(
@@ -719,8 +445,8 @@ def bpe_fertility(
     n_merges: int = 64,
     text_col: str = "text",
     min_pair_count: int = 2,
-    ckpt_every: int = 6,
-    vocab_partitions: int | None = None,
+    memo_key=None,
+    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """One-row FINAL-STATE certificate of a long merge chain:
     (n_merges_done, n_words, total_freq, total_subwords,
@@ -729,28 +455,44 @@ def bpe_fertility(
     match on this row certifies the end state of all n_merges rewrites
     without emitting the vocabulary (the r4 concern that certifying 64
     unrolls needs 64-step output rows: it doesn't — the totals pin the
-    final state)."""
-    merges, vocab = _merge_chain_driver(
-        df, n_merges, text_col, min_pair_count, ckpt_every,
-        vocab_partitions,
-    )
-    return (
-        vocab.agg(
+    final state).
+
+    Gated like learn_bpe_merges. Below the gate the totals come from
+    the heap learner's final state, computed from the SAME learned
+    chain as learn_bpe_merges when `memo_key` matches (re-learning it
+    was the r5 perf finding); above it they aggregate the distributed
+    loop's final vocabulary. The division/round is one Spark
+    expression on both branches, so rounding is engine-identical."""
+    wf, fits = _gated_wf(df, text_col, collect_max_rows)
+    if fits:
+        merges, n_words, total_freq, total_subwords = _heap_chain(
+            wf, n_merges, text_col, min_pair_count, memo_key
+        )
+        if n_words == 0:
+            # empty corpus: SQL sum() over zero rows is NULL, not 0
+            # (DETERMINISM.md rule 7) — same as the aggregate branch
+            total_freq = total_subwords = None
+        totals = df.sparkSession.createDataFrame(
+            [(n_words, total_freq, total_subwords)],
+            "n_words LONG, total_freq LONG, total_subwords LONG",
+        )
+    else:
+        merges, vocab = _merge_loop(wf, n_merges, min_pair_count)
+        totals = vocab.agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
             F.sum("freq").cast("long").alias("total_freq"),
             F.sum(F.size("seq") * F.col("freq"))
             .cast("long")
             .alias("total_subwords"),
         )
-        .select(
-            F.lit(len(merges)).cast("int").alias("n_merges_done"),
-            "n_words",
-            "total_freq",
-            "total_subwords",
-            F.round(
-                F.col("total_subwords")
-                / F.greatest(F.col("total_freq"), F.lit(1)),
-                6,
-            ).alias("mean_fertility"),
-        )
+    return totals.select(
+        F.lit(len(merges)).cast("int").alias("n_merges_done"),
+        "n_words",
+        "total_freq",
+        "total_subwords",
+        F.round(
+            F.col("total_subwords")
+            / F.greatest(F.col("total_freq"), F.lit(1)),
+            6,
+        ).alias("mean_fertility"),
     )

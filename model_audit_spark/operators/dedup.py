@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from model_audit_spark.functions.text import ngrams, word_tokens
-from model_audit_spark.persistence import track
+from model_audit_spark.persistence import fill_caches_concurrently, track
 
 # Smallest prime > 2^32; minhash permutation modulus and the sentinel
 # signature value for documents with no shingles.
@@ -1316,38 +1316,22 @@ def dedup_recall_report(
     # but submitted as one union plan their AQE stage waves ran
     # strictly leg-after-leg (driver r12: 11.1 s with an 8c/32c ratio
     # of 0.95 — a serial job chain, not compute). Wave 1: winnow and
-    # simhash never touch the shingle relation, so they start
-    # immediately while THIS thread fills the shared shingle cache
-    # (pre-filling it matters: the two shingle consumers racing a cold
-    # cache would each recompute it into the same blocks). Wave 2: the
-    # truth/prefix relation and the minhash leg scan the warm blocks.
+    # simhash never touch the shingle relation, so they fill alongside
+    # the shared shingle cache (pre-filling it matters: the two
+    # shingle consumers racing a cold cache would each recompute it
+    # into the same blocks). Wave 2: the truth/prefix relation and the
+    # minhash leg scan the warm blocks.
     # Same-machine A/B at sf0.1: 13.57 → 9.0 s; exec leg 10.3 → 1.1 s.
-    from concurrent.futures import ThreadPoolExecutor
-
-    sc = df.sparkSession.sparkContext
-
-    def _fill(rel: DataFrame, label: str) -> None:
-        sc.setJobDescription(label)
-        try:
-            rel.count()
-        finally:
-            sc.setJobDescription(None)
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            pool.submit(_fill, cand_sets["winnow"],
-                        "recall_report: winnow"),
-            pool.submit(_fill, cand_sets["simhash"],
-                        "recall_report: simhash"),
-        ]
-        _fill(sh_rel, "recall_report: shingles")
-        futs += [
-            pool.submit(_fill, truth, "recall_report: truth+prefix"),
-            pool.submit(_fill, cand_sets["minhash_lsh"],
-                        "recall_report: minhash_lsh"),
-        ]
-        for f in futs:
-            f.result()
+    fill_caches_concurrently(
+        [cand_sets["winnow"], cand_sets["simhash"], sh_rel],
+        labels=["recall_report: winnow", "recall_report: simhash",
+                "recall_report: shingles"],
+    )
+    fill_caches_concurrently(
+        [truth, cand_sets["minhash_lsh"]],
+        labels=["recall_report: truth+prefix",
+                "recall_report: minhash_lsh"],
+    )
     cands = None
     for name in sorted(cand_sets):
         p = cand_sets[name].select(

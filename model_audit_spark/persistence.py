@@ -117,14 +117,14 @@ def memo_obj(key: Hashable, builder: Callable[[], object]) -> object:
 def fill_caches_concurrently(
     dfs: list[DataFrame],
     labels: list[str] | None = None,
-    max_workers: int = 5,
 ) -> None:
     """Materialize several INDEPENDENT persisted relations' caches
     concurrently (r13, guide §2.6 "overlap independent jobs"): one
     count() per relation, submitted from a small thread pool, so the
     FIFO scheduler backfills executors freed by one leg's straggler
     tail with the next leg's tasks instead of running the legs'
-    AQE stage waves strictly leg-after-leg through a union plan.
+    AQE stage waves strictly leg-after-leg through a union plan. One
+    worker per relation; the call returns when every leg is filled.
 
     Correctness-neutral: count() only fills the caches the final plan
     then scans. Contract: the relations must not share an UNFILLED lazy
@@ -132,6 +132,9 @@ def fill_caches_concurrently(
     lazy_checkpoint_scope), and any relation they ALL scan should be
     filled BEFORE this call — concurrent legs racing a cold shared
     cache each recompute it into the same blocks (correct, wasted CPU).
+    Workers must not enter lazy_checkpoint_scope: its lock blocks every
+    other thread, so a worker entering a scope while the calling thread
+    holds one (and waits here) deadlocks the session.
     Job descriptions are thread-local, so each leg labels its own jobs
     in the UI. Exceptions propagate (first failure wins)."""
     from concurrent.futures import ThreadPoolExecutor
@@ -149,9 +152,7 @@ def fill_caches_concurrently(
             if labels:
                 sc.setJobDescription(None)
 
-    with ThreadPoolExecutor(
-        max_workers=min(max_workers, len(dfs))
-    ) as pool:
+    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
         list(pool.map(_fill, range(len(dfs))))
 
 

@@ -3,6 +3,7 @@ per-key isolation, and the [ts - lookback, ts) boundary half-openness."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from model_audit_spark.operators.asof import asof_join, range_join
 
@@ -118,6 +119,20 @@ def test_session_paths_hand_computed(spark):
         (1, "view>click", 2),
         (2, "view>view>click>purchase>view", 1),
     ]
+
+
+def test_session_paths_rejects_non_positive_max_steps(spark):
+    """max_steps < 1 raises at entry instead of silently filtering out
+    every session."""
+    from model_audit_spark.operators.threads import session_paths
+
+    df = spark.createDataFrame(
+        [(1, None, 7, "view")],
+        "event_id long, ts timestamp, user_id long, event_type string",
+    )
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_steps"):
+            session_paths(df, max_steps=bad)
 
 
 def test_burstiness_periodic_vs_bursty(spark):

@@ -1,10 +1,16 @@
 """BPE merge learning: parity with a sequential reference implementation,
-the greedy-overlap rule, and early exhaustion."""
+the greedy-overlap rule, and early exhaustion — each reference check runs
+on both sides of the vocabulary-size gate (collect_max_rows=None: the
+driver-side heap learner; collect_max_rows=1: the distributed loop)."""
 from __future__ import annotations
 
 import collections
 
 from pyspark.sql import functions as F
+
+# both sides of the vocabulary-size gate: None keeps the default ceiling
+# (driver-side heap learner), 1 forces the distributed fallback loop
+GATES = (None, 1)
 
 
 def _ref_bpe(words: list[str], k: int, min_count: int = 2):
@@ -42,13 +48,15 @@ def _ref_bpe(words: list[str], k: int, min_count: int = 2):
     return merges
 
 
-def _learned(spark, text: str, k: int):
+def _learned(spark, text: str, k: int, collect_max_rows=None):
     from model_audit_spark.operators.bpe import learn_bpe_merges
 
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     return [
         (r["step"], r["left"], r["right"], r["pair_count"])
-        for r in learn_bpe_merges(df, n_merges=k)
+        for r in learn_bpe_merges(
+            df, n_merges=k, collect_max_rows=collect_max_rows
+        )
         .orderBy("step")
         .collect()
     ]
@@ -59,7 +67,8 @@ def test_bpe_matches_sequential_reference_on_classic_corpus(spark):
         "low low low low low lower lower newest newest newest newest "
         "newest newest widest widest widest"
     )
-    assert _learned(spark, text, 6) == _ref_bpe(text.split(), 6)
+    for gate in GATES:
+        assert _learned(spark, text, 6, gate) == _ref_bpe(text.split(), 6)
 
 
 def test_bpe_greedy_left_to_right_non_overlapping(spark):
@@ -81,17 +90,19 @@ def test_bpe_greedy_left_to_right_non_overlapping(spark):
     ]
     # full loop on a chain corpus agrees with the reference
     text = "llll llll lll"
-    assert _learned(spark, text, 3) == _ref_bpe(text.split(), 3)
+    for gate in GATES:
+        assert _learned(spark, text, 3, gate) == _ref_bpe(text.split(), 3)
 
 
 def test_bpe_early_exhaustion_emits_fewer_rows(spark):
     """A corpus whose pairs all drop under min_pair_count after a few
     merges stops early on BOTH paths."""
     text = "ab ab cd"  # (a,b) x2 qualifies; after merging, nothing does
-    got = _learned(spark, text, 5)
     ref = _ref_bpe(text.split(), 5)
-    assert got == ref
-    assert len(got) == 1 and got[0][:3] == (1, "a", "b")
+    for gate in GATES:
+        got = _learned(spark, text, 5, gate)
+        assert got == ref
+        assert len(got) == 1 and got[0][:3] == (1, "a", "b")
 
 
 def test_bpe_oracle_twin_matches_reference(spark):
@@ -136,18 +147,30 @@ def test_bpe_vocab_segments_matches_reference_segmentation(spark):
                     i += 1
             seqs[w] = out
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = {
-        r["word"]: (r["freq"], r["segments"], r["n_subwords"])
-        for r in bpe_vocab_segments(df, n_merges=6).collect()
-    }
-    import collections
-
     freqs = collections.Counter(words)
-    for w, (f, seg, n) in got.items():
-        assert f == freqs[w]
-        assert seg == " ".join(seqs[w])
-        assert n == len(seqs[w])
-    assert set(got) == set(freqs)
+    for gate in GATES:
+        got = {
+            r["word"]: (r["freq"], r["segments"], r["n_subwords"])
+            for r in bpe_vocab_segments(
+                df, n_merges=6, collect_max_rows=gate
+            ).collect()
+        }
+        for w, (f, seg, n) in got.items():
+            assert f == freqs[w]
+            assert seg == " ".join(seqs[w])
+            assert n == len(seqs[w])
+        assert set(got) == set(freqs)
+        # top_k keeps the most frequent words, (freq desc, word asc)
+        top = [
+            (r["word"], r["segments"])
+            for r in bpe_vocab_segments(
+                df, n_merges=6, top_k=2, collect_max_rows=gate
+            ).collect()
+        ]
+        assert top == [
+            ("newest", " ".join(seqs["newest"])),
+            ("low", " ".join(seqs["low"])),
+        ]
 
 
 def test_bpe_sql_twin_property_random_corpora():
@@ -179,40 +202,17 @@ def test_bpe_sql_twin_property_random_corpora():
         assert got == _ref_bpe(words, 4), (trial, text, got)
 
 
-def test_driver_argmax_equals_in_dag_chain(spark):
-    """The two merge-loop shapes (in-DAG min_by chain vs driver-argmax
-    literal rewrite, r5) must emit IDENTICAL merge tables — same
-    algorithm, different execution shape."""
-    from model_audit_spark.operators.bpe import (
-        learn_bpe_merges,
-        learn_bpe_merges_driver,
-    )
-
-    rows = [
-        (i, "the cat sat on the mat " * 3 + f"tail{i % 4}")
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    dag = [tuple(r) for r in learn_bpe_merges(df, n_merges=10).collect()]
-    drv = [
-        tuple(r)
-        for r in learn_bpe_merges_driver(
-            df, n_merges=10, ckpt_every=3
-        ).collect()
-    ]
-    assert dag == drv
-    assert len(dag) == 10
-
-
 def test_driver_argmax_early_exhaustion_stops_loop(spark):
-    from model_audit_spark.operators.bpe import learn_bpe_merges_driver
+    """The distributed fallback loop (forced by collect_max_rows=1)
+    exits on the first exhausted step instead of running all 50."""
+    from model_audit_spark.operators.bpe import learn_bpe_merges
 
     df = spark.createDataFrame(
         [(1, "ab ab"), (2, "ab")], "doc_id long, text string"
     )
     # 'a b' merges (count 3); then 'ab' is a single symbol per word —
     # no adjacent pair reaches min_pair_count=2 again
-    out = learn_bpe_merges_driver(df, n_merges=50).collect()
+    out = learn_bpe_merges(df, n_merges=50, collect_max_rows=1).collect()
     assert len(out) == 1
     assert (out[0]["left"], out[0]["right"]) == ("a", "b")
 
@@ -220,83 +220,40 @@ def test_driver_argmax_early_exhaustion_stops_loop(spark):
 def test_bpe_fertility_final_state(spark):
     """Fertility = freq-weighted subwords per word; with enough merges
     the corpus' frequent words collapse to single symbols, pushing the
-    mean toward 1 from above. Totals are exact integers."""
+    mean toward 1 from above. Totals are exact integers. An empty
+    corpus follows SQL-sum semantics: n_words 0, NULL totals (sum over
+    zero rows), NULL fertility."""
     from model_audit_spark.operators.bpe import bpe_fertility
 
     rows = [(i, "alpha beta beta") for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    r0 = bpe_fertility(df, n_merges=0).collect()[0]
-    r8 = bpe_fertility(df, n_merges=8).collect()[0]
-    assert r0["n_words"] == r8["n_words"] == 2
-    assert r0["total_freq"] == r8["total_freq"] == 60
-    # before merges: 'alpha'=5 chars x20 + 'beta'=4x40 = 260 subwords
-    assert r0["total_subwords"] == 260
-    assert r0["mean_fertility"] == round(260 / 60, 6)
-    # 8 merges fully fuse both words (4+3 needed): 1 subword per token
-    assert r8["total_subwords"] == 60
-    assert r8["mean_fertility"] == 1.0
-    assert r8["n_merges_done"] <= 8
-
-
-def test_collected_learner_equals_distributed_chains(spark):
-    """The r6 collected-vocabulary shape (one corpus pass + incremental
-    driver learner) must emit an IDENTICAL merge table to both
-    distributed shapes — the reappearing-pair and tie-break paths
-    included (the 'tailN' suffixes force count ties broken by string
-    order)."""
-    from model_audit_spark.operators.bpe import (
-        learn_bpe_merges,
-        learn_bpe_merges_collected,
-        learn_bpe_merges_driver,
-    )
-
-    rows = [
-        (i, "the cat sat on the mat " * 3 + f"tail{i % 4}")
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    dag = [tuple(r) for r in learn_bpe_merges(df, n_merges=12).collect()]
-    drv = [
-        tuple(r)
-        for r in learn_bpe_merges_driver(df, n_merges=12).collect()
-    ]
-    col = [
-        tuple(r)
-        for r in learn_bpe_merges_collected(df, n_merges=12).collect()
-    ]
-    assert col == dag == drv
-    assert len(col) == 12
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    for gate in GATES:
+        r0 = bpe_fertility(df, n_merges=0, collect_max_rows=gate)
+        r8 = bpe_fertility(df, n_merges=8, collect_max_rows=gate)
+        r0, r8 = r0.collect()[0], r8.collect()[0]
+        assert r0["n_words"] == r8["n_words"] == 2
+        assert r0["total_freq"] == r8["total_freq"] == 60
+        # before merges: 'alpha'=5 chars x20 + 'beta'=4x40 = 260 subwords
+        assert r0["total_subwords"] == 260
+        assert r0["mean_fertility"] == round(260 / 60, 6)
+        # 8 merges fully fuse both words (4+3 needed): 1 subword/token
+        assert r8["total_subwords"] == 60
+        assert r8["mean_fertility"] == 1.0
+        assert r8["n_merges_done"] <= 8
+        e = bpe_fertility(empty, n_merges=4, collect_max_rows=gate)
+        assert tuple(e.collect()[0]) == (0, 0, None, None, None)
 
 
 def test_collected_learner_early_exhaustion(spark):
-    from model_audit_spark.operators.bpe import learn_bpe_merges_collected
+    from model_audit_spark.operators.bpe import learn_bpe_merges
 
     df = spark.createDataFrame(
         [(1, "ab ab"), (2, "ab")], "doc_id long, text string"
     )
-    out = learn_bpe_merges_collected(df, n_merges=50).collect()
+    out = learn_bpe_merges(df, n_merges=50).collect()
     assert len(out) == 1
     assert (out[0]["left"], out[0]["right"]) == ("a", "b")
-
-
-def test_collected_fertility_matches_distributed(spark):
-    from model_audit_spark.operators.bpe import (
-        bpe_fertility,
-        bpe_fertility_collected,
-    )
-
-    rows = [(i, "alpha beta beta gamma-x") for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for k in (0, 8):
-        a = bpe_fertility(df, n_merges=k).collect()[0]
-        b = bpe_fertility_collected(df, n_merges=k).collect()[0]
-        assert tuple(a) == tuple(b), (k, tuple(a), tuple(b))
-    # empty corpus: both shapes emit SQL-sum semantics — n_words 0,
-    # NULL totals (sum over zero rows), NULL fertility
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    a = bpe_fertility(empty, n_merges=4).collect()[0]
-    b = bpe_fertility_collected(empty, n_merges=4).collect()[0]
-    assert tuple(a) == tuple(b) == (0, 0, None, None, None)
 
 
 def test_collected_chain_memo_shares_work(spark):
@@ -304,18 +261,18 @@ def test_collected_chain_memo_shares_work(spark):
     learned (one obj-memo entry, not two); release_all clears it."""
     from model_audit_spark import persistence
     from model_audit_spark.operators.bpe import (
-        bpe_fertility_collected,
-        learn_bpe_merges_collected,
+        bpe_fertility,
+        learn_bpe_merges,
     )
 
     persistence.release_all()
     df = spark.createDataFrame(
         [(1, "low low lower newest newest")], "doc_id long, text string"
     )
-    m = learn_bpe_merges_collected(df, n_merges=6, memo_key="t")
+    m = learn_bpe_merges(df, n_merges=6, memo_key="t")
     n_m = m.count()
     assert persistence.obj_memo_size() == 1
-    f = bpe_fertility_collected(df, n_merges=6, memo_key="t").collect()[0]
+    f = bpe_fertility(df, n_merges=6, memo_key="t").collect()[0]
     assert persistence.obj_memo_size() == 1  # reused, not re-learned
     assert f["n_merges_done"] == n_m
     persistence.release_all()
@@ -366,54 +323,18 @@ def test_incremental_learner_property_random_corpora():
         assert tot_sub == sum(len(s) * freq[w] for w, s in seqs.items())
 
 
-def test_collected_segments_equals_in_dag_segments(spark):
-    """bpe_vocab_segments_collected (r12: driver-learned chain applied
-    as literal apply_merge folds) must emit IDENTICAL rows to the
-    in-DAG bpe_vocab_segments — tie-heavy corpus, with and without
-    top_k (the gate query's configuration)."""
-    from model_audit_spark.operators.bpe import (
-        bpe_vocab_segments,
-        bpe_vocab_segments_collected,
-    )
-
-    rows = [
-        (i, "the cat sat on the mat " * 3 + f"tail{i % 4}")
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    dag = {
-        tuple(r)
-        for r in bpe_vocab_segments(df, n_merges=8).collect()
-    }
-    col = {
-        tuple(r)
-        for r in bpe_vocab_segments_collected(df, n_merges=8).collect()
-    }
-    assert col == dag
-    dag_k = [
-        tuple(r)
-        for r in bpe_vocab_segments(df, n_merges=8, top_k=5).collect()
-    ]
-    col_k = [
-        tuple(r)
-        for r in bpe_vocab_segments_collected(
-            df, n_merges=8, top_k=5
-        ).collect()
-    ]
-    assert col_k == dag_k
-
-
 def test_vocab_gate_forces_distributed_fallback(spark):
-    """r13 (VERDICT #4): the collected learner is GATED on the measured
-    vocabulary row count — with collect_max_rows below the corpus
-    vocabulary, every *_collected entry point must route through the
-    distributed driver-argmax loop (no unbounded driver collect) and
-    emit IDENTICAL output to the collected path."""
+    """r13 (VERDICT #4): the driver-side learner is GATED on the
+    measured vocabulary row count — with collect_max_rows below the
+    corpus vocabulary, every entry point must route through the
+    distributed loop (no unbounded driver collect) and emit IDENTICAL
+    output to the collected path, on a multi-document corpus whose
+    'tailN' suffixes force count ties broken by string order."""
     from model_audit_spark import persistence
     from model_audit_spark.operators.bpe import (
-        bpe_fertility_collected,
-        bpe_vocab_segments_collected,
-        learn_bpe_merges_collected,
+        bpe_fertility,
+        bpe_vocab_segments,
+        learn_bpe_merges,
     )
 
     rows = [
@@ -423,39 +344,35 @@ def test_vocab_gate_forces_distributed_fallback(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     merges_fast = [
-        tuple(r)
-        for r in learn_bpe_merges_collected(df, n_merges=10).collect()
+        tuple(r) for r in learn_bpe_merges(df, n_merges=10).collect()
     ]
+    words = [w for _, t in rows for w in t.split()]
+    assert merges_fast == _ref_bpe(words, 10)
     persistence.release_all()
     merges_fb = [
         tuple(r)
-        for r in learn_bpe_merges_collected(
+        for r in learn_bpe_merges(
             df, n_merges=10, collect_max_rows=1
         ).collect()
     ]
     assert merges_fb == merges_fast and len(merges_fb) == 10
 
     persistence.release_all()
-    fert_fast = tuple(
-        bpe_fertility_collected(df, n_merges=10).collect()[0]
-    )
+    fert_fast = tuple(bpe_fertility(df, n_merges=10).collect()[0])
     persistence.release_all()
     fert_fb = tuple(
-        bpe_fertility_collected(
-            df, n_merges=10, collect_max_rows=1
-        ).collect()[0]
+        bpe_fertility(df, n_merges=10, collect_max_rows=1).collect()[0]
     )
     assert fert_fb == fert_fast
 
     persistence.release_all()
     seg_fast = sorted(
-        tuple(r)
-        for r in bpe_vocab_segments_collected(df, n_merges=6).collect()
+        tuple(r) for r in bpe_vocab_segments(df, n_merges=6).collect()
     )
     persistence.release_all()
     seg_fb = sorted(
         tuple(r)
-        for r in bpe_vocab_segments_collected(
+        for r in bpe_vocab_segments(
             df, n_merges=6, collect_max_rows=1
         ).collect()
     )

@@ -301,3 +301,28 @@ def test_concurrent_compile_inside_scope_is_correct(spark):
     assert entered, "second scope never ran after the first exited"
     assert not errors
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_fill_caches_concurrently_fills_every_leg(spark):
+    """Every relation is persisted AND materialized when the call
+    returns (one new persistent RDD per leg), and an exception raised
+    by one leg reaches the caller."""
+    spark.catalog.clearCache()
+    base = _n_persistent_rdds(spark)
+    legs = [
+        persistence.track(spark.range(n).persist()) for n in (10, 20, 30)
+    ]
+    persistence.fill_caches_concurrently(
+        legs, labels=["fill: a", "fill: b", "fill: c"]
+    )
+    assert all(persistence._is_live(df) for df in legs)
+    assert _n_persistent_rdds(spark) == base + 3
+
+    boom = persistence.track(
+        spark.range(5)
+        .filter(F.raise_error(F.lit("leg failed")).isNull())
+        .persist()
+    )
+    ok = persistence.track(spark.range(7).persist())
+    with pytest.raises(Exception, match="leg failed"):
+        persistence.fill_caches_concurrently([ok, boom])
