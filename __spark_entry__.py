@@ -3834,6 +3834,13 @@ _CHECK_WINDOW = [
     "style_fingerprint",
     "verify_sources",
     "detect_distribution",
+    "dedup_clusters",
+    "dedup_clusters_incremental",
+    "dedup_recall_report",
+    "dedup_decisions",
+    "cluster_retention",
+    "leakage_safe_splits",
+    "effective_corpus_size",
     "style_count_distribution",
     "style_scores_long",
     "ann_param_sweep",
@@ -3847,7 +3854,6 @@ _CHECK_WINDOW = [
     "bpe_fertility64",
     "bpe_merges",
     "bpe_segments",
-    "dedup_recall_report",
     "detect_documents",
     "dli_compare_sources",
     "session_paths",
@@ -3874,12 +3880,6 @@ _CHECK_WINDOW = [
     "memorization_levenshtein",
     "memorization_verbatim",
     "pack_chunks",
-    "paragraph_dedup",
-    "phrase_search",
-    "pii_scan",
-    "q_events_asof",
-    "q_events_range_join",
-    "q_events_sessionize",
 ]
 
 

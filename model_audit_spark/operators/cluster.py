@@ -3,22 +3,33 @@
 The dedup operators (dedup.py) emit verified near-duplicate PAIRS
 (id_a, id_b). Retention policy needs CLUSTERS: if A~B and B~C, all three
 are one duplicate group even when (A, C) was never a candidate pair.
-This module closes that gap with a distributed connected-components pass —
-the reference has no equivalent (its corpus fits in one Python list); the
-algorithm is the standard iterative min-label propagation used by
-large-scale dedup pipelines.
+This module closes that gap with a connected-components pass — the
+reference has no equivalent (its corpus fits in one Python list). Small
+pair graphs resolve on the driver by union-find; above a size gate the
+standard iterative min-label propagation used by large-scale dedup
+pipelines runs distributed.
 
 Scale notes (100 TB):
-- Each iteration is ONE shuffle: edges ⋈ labels on the node key, then a
-  min-aggregate. Both sides are hash-partitioned on the same key count so
+- The pair graph is the size of the verified-pair relation, not the
+  corpus. Up to _COLLECT_MAX_PAIRS pairs it is collected in ONE job and
+  resolved on the driver by union-find (union-by-min, path compression)
+  — the exact transitive closure the DuckDB twin's recursive CTE
+  computes — and the components return as an Arrow-backed
+  LocalRelation, which launches no job. dedup_decisions resolves its
+  whole decision there too (see _collected_decisions). At the 1M-pair
+  gate the driver path measured about 3x faster than the loop (numbers
+  beside the constant).
+- Above the gate the distributed min-label loop runs. Each iteration is
+  ONE shuffle: edges ⋈ labels on the node key, then a min-aggregate.
+  Both sides are hash-partitioned on the same key count so
   AQE/ReusedExchange can keep the edge side's layout across iterations.
-- Iteration count is the graph DIAMETER. LSH duplicate graphs are
-  near-cliques (every member collides with most others in some band), so
-  2-4 iterations converge in practice; `max_iter` bounds pathological
-  chains. For adversarial long-chain graphs, switch to the
-  large-star/small-star variant (O(log n) rounds) — not needed for dedup
-  workloads, where a >4-deep chain of pairwise-0.5-Jaccard docs is
-  vanishingly rare.
+- The loop's iteration count is the graph DIAMETER. LSH duplicate
+  graphs are near-cliques (every member collides with most others in
+  some band), so 2-4 iterations converge in practice. `max_iter` bounds
+  only this fallback: running out of rounds while labels still change
+  raises RuntimeError instead of returning labels that are not the
+  closure. For adversarial long-chain graphs, switch to the
+  large-star/small-star variant (O(log n) rounds).
 - Convergence is checked with a driver-side count per iteration (the same
   O(rounds) tiny actions GraphX/Pregel performs); each iteration's labels
   are `localCheckpoint`ed so the LOGICAL plan is truncated every round —
@@ -30,12 +41,96 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from model_audit_spark.persistence import lazy_checkpoint_scope, track
 
 __all__ = ["connected_components", "cluster_documents"]
+
+# Pair relations of at most this many rows resolve on the driver
+# (_collected_components); larger ones run the distributed loop.
+# Measured at the gate on a 4-core box (local[4], get_spark defaults),
+# a cached 1M-pair relation of 250k five-node chains, two runs each:
+# collect + union-find + Arrow relation took 4.3-5.4 s (7.8-11.1 s with
+# a distinct-count over the result) in 4 jobs and 330 MB peak Python
+# RSS; the distributed loop took 14.5-19.9 s (14.8-20.7 s) in 38 jobs.
+# The transfer is toArrow(): 2.2 s for those 1M rows, against 4.6 s
+# for a Row-object collect().
+_COLLECT_MAX_PAIRS = 1_000_000
+
+
+def _union_find_roots(edges) -> dict:
+    """node → min node id of its component over (a, b) edges, by
+    union-by-min with path compression: the exact transitive closure.
+
+    A NULL endpoint joins nothing (the loop's equi-joins drop it), so
+    its partner stays a singleton, and it surfaces as the one
+    (NULL → NULL) entry the loop's seed labels carry as well."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if rb < ra:
+            ra, rb = rb, ra
+        parent[rb] = ra
+    return {n: find(n) for n in parent}
+
+
+def _collected_components(
+    pairs: DataFrame, id_a: str, id_b: str, carry: tuple[str, ...] = ()
+) -> tuple[DataFrame, list[list]] | None:
+    """((node, comp) relation, collected columns) for a pair relation
+    of at most _COLLECT_MAX_PAIRS rows, else None — decided by ONE job
+    that collects at most one row past the gate. The columns are id_a
+    and id_b, cast to the node type Spark's union of the two gives
+    them, then `carry`. The relation is Arrow-backed: a LocalRelation
+    that launches no job, where a Python-list createDataFrame runs a
+    Python-worker job. Above the gate the probe job is the price of
+    the check: callers at scale pass a persisted pair relation (the
+    gate queries memoize theirs)."""
+    id_type = (
+        pairs.select(F.col(id_a).alias("n"))
+        .union(pairs.select(F.col(id_b).alias("n")))
+        .schema["n"]
+        .dataType
+    )
+    tbl = (
+        pairs.select(
+            F.col(id_a).cast(id_type), F.col(id_b).cast(id_type), *carry
+        )
+        .limit(_COLLECT_MAX_PAIRS + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > _COLLECT_MAX_PAIRS:
+        return None
+    cols = [c.to_pylist() for c in tbl.columns]
+    roots = _union_find_roots(zip(cols[0], cols[1]))
+    t = to_arrow_type(id_type)
+    comp = pairs.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(list(roots), t),
+                "comp": pa.array(list(roots.values()), t),
+            }
+        )
+    )
+    return comp, cols
 
 
 def connected_components(
@@ -49,8 +144,16 @@ def connected_components(
     component = the minimum node id reachable through the undirected pair
     graph — deterministic, order-independent, and stable under any
     partitioning (min is commutative), so the result hash-matches a
-    single-node transitive-closure oracle.
+    single-node transitive-closure oracle. Up to _COLLECT_MAX_PAIRS
+    pairs it is computed on the driver; above, by the distributed loop,
+    which raises RuntimeError if labels still change after `max_iter`
+    rounds.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    got = _collected_components(pairs, id_a, id_b)
+    if got is not None:
+        return got[0]
     edges_fwd = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     )
@@ -107,8 +210,11 @@ def connected_components(
             changed = new_labels.filter("_changed").count()
             labels = new_labels.drop("_changed")
             if changed == 0:
-                break
-        return labels
+                return labels
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; raise max_iter"
+        )
     finally:
         edges.unpersist()
 
@@ -240,7 +346,7 @@ def cluster_retention_by_quality(
     clean text).
 
     Output: (id, cluster_id, cluster_size, quality, keep) for every doc.
-    Same shuffle budget as cluster_documents: the components rounds plus
+    Same shuffle budget as cluster_documents: the components pass plus
     ONE cluster-keyed window pass computing size and the (quality desc,
     id asc) argmax together. Deterministic: the argmax key is the unique
     (quality, -id) tuple; quality_col must be a cross-engine-stable
@@ -621,8 +727,15 @@ def dedup_decisions(
     Reuses the retention relation (components + one cluster-keyed
     window pass); the only additions are a cluster-keyed join of
     removed rows to their keeper and a left join back to the verified
-    pair relation (both orientations).
+    pair relation (both orientations). Up to _COLLECT_MAX_PAIRS pairs
+    the whole decision is computed on the driver instead
+    (_collected_decisions), with the same rows and schema.
     """
+    decided = _collected_decisions(
+        docs_quality, verified_pairs, id_col, quality_col
+    )
+    if decided is not None:
+        return decided
     ret = cluster_retention_by_quality(
         docs_quality,
         verified_pairs.select("id_a", "id_b"),
@@ -663,6 +776,88 @@ def dedup_decisions(
             "kept_quality",
             F.col("jaccard").alias("direct_jaccard"),
             F.col("jaccard").isNotNull().alias("direct"),
+        )
+    )
+
+
+def _spark_order(v):
+    """Sort key ordering a nullable double as Spark's max(struct) does:
+    NULL lowest, NaN highest, -0.0 equal to 0.0."""
+    if v is None:
+        return (0, 0.0)
+    if v != v:
+        return (2, 0.0)
+    return (1, v)
+
+
+def _collected_decisions(
+    docs_quality: DataFrame,
+    verified_pairs: DataFrame,
+    id_col: str,
+    quality_col: str,
+) -> DataFrame | None:
+    """dedup_decisions resolved on the driver, or None above the gate.
+
+    Two jobs: the pairs are collected once with their jaccard
+    (_collected_components), and the qualities of the pair nodes come
+    back from one join of docs_quality against the Arrow component
+    relation — a document in no pair is a singleton and never removed.
+    Per cluster the keeper is max(quality, -id) in Spark's order,
+    cluster_size counts the member rows present in docs_quality, and
+    every removed member emits one row per matching pair orientation,
+    as the left join does (NULL direct_jaccard when none matches)."""
+    got = _collected_components(
+        verified_pairs, "id_a", "id_b", carry=("jaccard",)
+    )
+    if got is None:
+        return None
+    comp, (ids_a, ids_b, jaccards) = got
+    comp = comp.select(
+        F.col("node").alias("_node"), F.col("comp").alias("_comp")
+    )
+    members = (
+        docs_quality.join(comp, docs_quality[id_col] == comp["_node"])
+        .select(id_col, quality_col, "_comp")
+        .toArrow()
+    )
+    clusters: dict = {}
+    for doc, q, c in zip(*(col.to_pylist() for col in members.columns)):
+        clusters.setdefault(c, []).append((doc, q))
+    direct: dict = {}
+    for a, b, j in zip(ids_a, ids_b, jaccards):
+        direct.setdefault((a, b), []).append(j)
+        direct.setdefault((b, a), []).append(j)
+    rows = []
+    for ms in clusters.values():
+        keeper = max(ms, key=lambda m: (_spark_order(m[1]), -m[0]))[0]
+        kept = [m for m in ms if m[0] == keeper]
+        for rid, rq in ms:
+            if rid == keeper:
+                continue
+            for kid, kq in kept:
+                for j in direct.get((rid, kid), [None]):
+                    rows.append((rid, kid, len(ms), rq, kq, j, j is not None))
+    id_type = docs_quality.schema[id_col].dataType
+    q_type = docs_quality.schema[quality_col].dataType
+    schema = StructType(
+        [
+            StructField("removed_id", id_type),
+            StructField("kept_id", id_type),
+            StructField("cluster_size", LongType(), False),
+            StructField("removed_quality", q_type),
+            StructField("kept_quality", q_type),
+            StructField(
+                "direct_jaccard", verified_pairs.schema["jaccard"].dataType
+            ),
+            StructField("direct", BooleanType(), False),
+        ]
+    )
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    return docs_quality.sparkSession.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
         )
     )
 

@@ -1,56 +1,140 @@
 """Connected-components duplicate clustering (operators/cluster.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from model_audit_spark.operators import cluster as cluster_mod
 from model_audit_spark.operators.cluster import (
     cluster_documents,
     connected_components,
 )
+
+# pair-count gates: the default resolves these small graphs on the
+# driver; 0 forces the distributed loop (and dedup_decisions' window
+# chain) for every non-empty pair relation
+GATES = (cluster_mod._COLLECT_MAX_PAIRS, 0)
+
+
+def _gates(monkeypatch):
+    """Run the loop body once per gate in GATES — a loop inside each
+    test rather than parametrize, so the test IDs stay stable."""
+    for gate in GATES:
+        monkeypatch.setattr(cluster_mod, "_COLLECT_MAX_PAIRS", gate)
+        yield gate
 
 
 def _pairs(spark, rows):
     return spark.createDataFrame(rows, "id_a long, id_b long")
 
 
-def test_chain_transitivity(spark):
+def _new_jobs(spark, build):
+    """(build(), number of Spark jobs it launched)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    out = build()
+    return out, len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+def test_chain_transitivity(spark, monkeypatch):
     # 1-2, 2-3, 3-4: (1,4) never a pair, but all one component.
-    comp = connected_components(_pairs(spark, [(1, 2), (2, 3), (3, 4)]))
-    got = {r["node"]: r["comp"] for r in comp.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+    for _ in _gates(monkeypatch):
+        comp = connected_components(
+            _pairs(spark, [(1, 2), (2, 3), (3, 4)])
+        )
+        got = {r["node"]: r["comp"] for r in comp.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
-def test_disjoint_components_and_edge_direction(spark):
+def test_disjoint_components_and_edge_direction(spark, monkeypatch):
     # second component given with ids reversed (7, 5): min still wins
-    comp = connected_components(_pairs(spark, [(1, 2), (7, 5)]))
-    got = {r["node"]: r["comp"] for r in comp.collect()}
-    assert got == {1: 1, 2: 1, 5: 5, 7: 5}
+    for _ in _gates(monkeypatch):
+        comp = connected_components(_pairs(spark, [(1, 2), (7, 5)]))
+        got = {r["node"]: r["comp"] for r in comp.collect()}
+        assert got == {1: 1, 2: 1, 5: 5, 7: 5}
 
 
-def test_long_chain_converges_past_one_round(spark):
+def test_long_chain_converges_past_one_round(spark, monkeypatch):
     # diameter-8 path: needs several propagation rounds, not just one
     edges = [(i, i + 1) for i in range(10, 18)]
-    comp = connected_components(_pairs(spark, edges))
-    assert {r["comp"] for r in comp.collect()} == {10}
+    for _ in _gates(monkeypatch):
+        comp = connected_components(_pairs(spark, edges))
+        assert {r["comp"] for r in comp.collect()} == {10}
 
 
-def test_cluster_documents_singletons_and_keep(spark):
+def test_connected_components_rejects_non_positive_max_iter(spark):
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iter"):
+            connected_components(_pairs(spark, [(1, 2)]), max_iter=bad)
+
+
+def test_fallback_loop_raises_when_rounds_run_out(spark, monkeypatch):
+    """A diameter-8 chain cannot converge in 2 rounds: the loop must
+    refuse to return a partial closure."""
+    monkeypatch.setattr(cluster_mod, "_COLLECT_MAX_PAIRS", 0)
+    edges = [(i, i + 1) for i in range(10, 18)]
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(_pairs(spark, edges), max_iter=2)
+
+
+def test_null_ids_match_the_loop(spark, monkeypatch):
+    """A NULL endpoint joins nothing on either path: its partner stays a
+    singleton and the NULL surfaces as one (NULL, NULL) row."""
+    rows = [(1, 2), (3, None), (None, None), (2, 4)]
+    got = []
+    for _ in _gates(monkeypatch):
+        comp = connected_components(_pairs(spark, rows))
+        got.append(sorted(map(tuple, comp.collect()), key=repr))
+    assert got[0] == got[1]
+    assert dict(got[0]) == {1: 1, 2: 1, 4: 1, 3: 3, None: None}
+
+
+def test_collected_path_launches_few_jobs(spark, monkeypatch):
+    """Below the gate the components cost one collect job, where the
+    loop pays a seed checkpoint plus a checkpoint and a count per round;
+    dedup_decisions adds one join job for the member qualities."""
+    from model_audit_spark.operators.cluster import dedup_decisions
+
+    edges = _pairs(spark, [(i, i + 1) for i in range(1, 6)]).persist()
+    edges.count()
+    _, fast = _new_jobs(spark, lambda: connected_components(edges))
+    assert fast == 1
+    q = spark.range(1, 8).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") / 10).alias("quality_score"),
+    )
+    pairs = edges.withColumn("jaccard", F.lit(0.5))
+    dec, n = _new_jobs(spark, lambda: dedup_decisions(q, pairs))
+    assert n <= 3, f"collected dedup_decisions ran {n} jobs"
+    assert dec.count() == 5
+    monkeypatch.setattr(cluster_mod, "_COLLECT_MAX_PAIRS", 0)
+    _, slow = _new_jobs(spark, lambda: connected_components(edges))
+    assert slow > 5, f"forced loop ran only {slow} jobs"
+    edges.unpersist()
+
+
+def test_cluster_documents_singletons_and_keep(spark, monkeypatch):
     docs = spark.range(1, 7).select(F.col("id").alias("doc_id"))
-    out = cluster_documents(docs, _pairs(spark, [(2, 4), (4, 6)]))
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows[2]["cluster_id"] == 2 and rows[4]["cluster_id"] == 2
-    assert rows[6]["cluster_id"] == 2 and rows[6]["cluster_size"] == 3
-    # singletons keep themselves
-    for d in (1, 3, 5):
-        assert rows[d]["cluster_id"] == d and rows[d]["keep"]
-        assert rows[d]["cluster_size"] == 1
-    # exactly one keeper per cluster, and it is the min id
-    assert rows[2]["keep"] and not rows[4]["keep"] and not rows[6]["keep"]
+    for _ in _gates(monkeypatch):
+        out = cluster_documents(docs, _pairs(spark, [(2, 4), (4, 6)]))
+        rows = {r["doc_id"]: r for r in out.collect()}
+        assert rows[2]["cluster_id"] == 2 and rows[4]["cluster_id"] == 2
+        assert rows[6]["cluster_id"] == 2 and rows[6]["cluster_size"] == 3
+        # singletons keep themselves
+        for d in (1, 3, 5):
+            assert rows[d]["cluster_id"] == d and rows[d]["keep"]
+            assert rows[d]["cluster_size"] == 1
+        # exactly one keeper per cluster, and it is the min id
+        assert rows[2]["keep"]
+        assert not rows[4]["keep"] and not rows[6]["keep"]
 
 
-def test_empty_pairs_all_singletons(spark):
+def test_empty_pairs_all_singletons(spark, monkeypatch):
     docs = spark.range(3).select(F.col("id").alias("doc_id"))
-    out = cluster_documents(docs, _pairs(spark, []))
-    assert all(r["keep"] and r["cluster_size"] == 1 for r in out.collect())
+    for _ in _gates(monkeypatch):
+        out = cluster_documents(docs, _pairs(spark, []))
+        assert all(
+            r["keep"] and r["cluster_size"] == 1 for r in out.collect()
+        )
 
 
 def test_source_overlap_counts_cross_source_pairs(spark):
@@ -113,7 +197,7 @@ def test_pagerank_empty_graph_returns_empty(spark):
     assert out.count() == 0
 
 
-def test_cluster_retention_keeps_best_quality(spark):
+def test_cluster_retention_keeps_best_quality(spark, monkeypatch):
     from model_audit_spark.operators.cluster import (
         cluster_retention_by_quality,
     )
@@ -126,11 +210,15 @@ def test_cluster_retention_keeps_best_quality(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "id_a long, id_b long"
     )
-    out = {r.doc_id: r for r in cluster_retention_by_quality(docs, pairs).collect()}
-    # highest quality wins; tie (2 vs 3 at 0.9) -> lowest id
-    assert out[2].keep and not out[1].keep and not out[3].keep
-    assert out[4].keep and out[4].cluster_size == 1
-    assert out[1].cluster_size == 3
+    for _ in _gates(monkeypatch):
+        out = {
+            r.doc_id: r
+            for r in cluster_retention_by_quality(docs, pairs).collect()
+        }
+        # highest quality wins; tie (2 vs 3 at 0.9) -> lowest id
+        assert out[2].keep and not out[1].keep and not out[3].keep
+        assert out[4].keep and out[4].cluster_size == 1
+        assert out[1].cluster_size == 3
 
 
 def test_triangle_counts_basic(spark):
@@ -159,7 +247,7 @@ def test_triangle_counts_complete_graph(spark):
     assert rows == {0: 3, 1: 3, 2: 3, 3: 3}
 
 
-def test_incremental_clusters_equal_full_recompute(spark):
+def test_incremental_clusters_equal_full_recompute(spark, monkeypatch):
     from pyspark.sql import Row
     from model_audit_spark.operators.cluster import (
         cluster_documents,
@@ -179,20 +267,21 @@ def test_incremental_clusters_equal_full_recompute(spark):
     new_pairs = spark.createDataFrame(
         [Row(id_a=3, id_b=10), Row(id_a=10, id_b=5), Row(id_a=20, id_b=7)]
     )
-    assignment = cluster_documents(old_docs, old_pairs).select(
-        "doc_id", "cluster_id"
-    )
-    inc = {r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["keep"])
-           for r in incremental_cluster_documents(
-               all_docs, assignment, new_pairs).collect()}
-    full = {r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["keep"])
-            for r in cluster_documents(
-                all_docs, old_pairs.unionByName(new_pairs)).collect()}
-    assert inc == full
-    # the merged mega-cluster {1,2,3,5,6,10} keeps min-id 1
-    assert inc[10] == (1, 6, False) and inc[1][2] is True
-    # untouched singleton stays a singleton
-    assert inc[8] == (8, 1, True)
+    for _ in _gates(monkeypatch):
+        assignment = cluster_documents(old_docs, old_pairs).select(
+            "doc_id", "cluster_id"
+        )
+        inc = {r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["keep"])
+               for r in incremental_cluster_documents(
+                   all_docs, assignment, new_pairs).collect()}
+        full = {r["doc_id"]: (r["cluster_id"], r["cluster_size"], r["keep"])
+                for r in cluster_documents(
+                    all_docs, old_pairs.unionByName(new_pairs)).collect()}
+        assert inc == full
+        # the merged mega-cluster {1,2,3,5,6,10} keeps min-id 1
+        assert inc[10] == (1, 6, False) and inc[1][2] is True
+        # untouched singleton stays a singleton
+        assert inc[8] == (8, 1, True)
 
 
 def test_graph_stats_triangle_plus_tail(spark):
@@ -251,7 +340,7 @@ def test_degree_orientation_kills_hub_wedges(spark):
     assert got == {0: 1, 1: 2, 2: 2, 21: 1}
 
 
-def test_dedup_decisions_names_keeper_and_direct_pairs(spark):
+def test_dedup_decisions_names_keeper_and_direct_pairs(spark, monkeypatch):
     """Cluster {1,2,3} chained 1-2, 2-3 (no 1-3 pair): keeper is the
     highest quality (doc 2); removed docs point at it, with a direct
     jaccard for observed pairs and NULL for the transitive one."""
@@ -264,15 +353,16 @@ def test_dedup_decisions_names_keeper_and_direct_pairs(spark):
     pairs = spark.createDataFrame(
         [(1, 2, 0.8), (2, 3, 0.7)], "id_a long, id_b long, jaccard double"
     )
-    got = {r.removed_id: r for r in dedup_decisions(q, pairs).collect()}
-    assert set(got) == {1, 3}  # doc 9 is a singleton, doc 2 kept
-    assert got[1].kept_id == 2 and got[1].direct_jaccard == 0.8
-    assert got[3].kept_id == 2 and got[3].direct_jaccard == 0.7
-    assert got[1].cluster_size == 3
-    assert got[1].removed_quality == 0.4 and got[1].kept_quality == 0.9
+    for _ in _gates(monkeypatch):
+        got = {r.removed_id: r for r in dedup_decisions(q, pairs).collect()}
+        assert set(got) == {1, 3}  # doc 9 is a singleton, doc 2 kept
+        assert got[1].kept_id == 2 and got[1].direct_jaccard == 0.8
+        assert got[3].kept_id == 2 and got[3].direct_jaccard == 0.7
+        assert got[1].cluster_size == 3
+        assert got[1].removed_quality == 0.4 and got[1].kept_quality == 0.9
 
 
-def test_dedup_decisions_transitive_pair_has_null_jaccard(spark):
+def test_dedup_decisions_transitive_pair_has_null_jaccard(spark, monkeypatch):
     from model_audit_spark.operators.cluster import dedup_decisions
 
     q = spark.createDataFrame(
@@ -284,9 +374,10 @@ def test_dedup_decisions_transitive_pair_has_null_jaccard(spark):
         [(1, 2, 0.6), (2, 3, 0.55)],
         "id_a long, id_b long, jaccard double",
     )
-    got = {r.removed_id: r for r in dedup_decisions(q, pairs).collect()}
-    assert got[2].direct and got[2].direct_jaccard == 0.6
-    assert not got[3].direct and got[3].direct_jaccard is None
+    for _ in _gates(monkeypatch):
+        got = {r.removed_id: r for r in dedup_decisions(q, pairs).collect()}
+        assert got[2].direct and got[2].direct_jaccard == 0.6
+        assert not got[3].direct and got[3].direct_jaccard is None
 
 
 def test_label_propagation_bridge_vs_cc(spark):
@@ -384,7 +475,7 @@ def test_k_core_fixpoint_within_round_budget(spark):
     assert deg[4] == 6 and deg[1] == 3 and deg[7] == 3
 
 
-def test_effective_corpus_size_hand_computed(spark):
+def test_effective_corpus_size_hand_computed(spark, monkeypatch):
     """Three docs in one source: docs 1,2 are a dup pair (cluster size
     2), doc 3 a singleton. Weighted mass = tok·1e6 DIV size summed
     exactly; a second source with one doc is untouched."""
@@ -403,15 +494,16 @@ def test_effective_corpus_size_hand_computed(spark):
         "doc_id long, text string, source string",
     )
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    clusters = cluster_documents(docs, pairs, "doc_id")
-    out = {r.source: r for r in
-           effective_corpus_size(docs, clusters).collect()}
-    web, books = out["web"], out["books"]
-    assert (web.n_docs, web.dup_docs, web.raw_tokens) == (3, 2, 11)
-    # 4·1e6/2 + 4·1e6/2 + 3·1e6/1 = 7_000_000 ppm-tokens (7 effective)
-    assert web.effective_tokens_ppm == 7_000_000
-    assert (books.n_docs, books.dup_docs, books.raw_tokens) == (1, 0, 2)
-    assert books.effective_tokens_ppm == 2_000_000
+    for _ in _gates(monkeypatch):
+        clusters = cluster_documents(docs, pairs, "doc_id")
+        out = {r.source: r for r in
+               effective_corpus_size(docs, clusters).collect()}
+        web, books = out["web"], out["books"]
+        assert (web.n_docs, web.dup_docs, web.raw_tokens) == (3, 2, 11)
+        # 4·1e6/2 + 4·1e6/2 + 3·1e6/1 = 7_000_000 ppm-tokens (7 effective)
+        assert web.effective_tokens_ppm == 7_000_000
+        assert (books.n_docs, books.dup_docs, books.raw_tokens) == (1, 0, 2)
+        assert books.effective_tokens_ppm == 2_000_000
 
 
 def test_adamic_adar_scores_exact(spark):
@@ -508,16 +600,10 @@ def test_iterative_loops_compile_without_eager_round_jobs(spark):
         "src long, dst long",
     )
     nodes = spark.range(1, 9).select(F.col("id").alias("node"))
-    tracker = spark.sparkContext.statusTracker()
 
-    def new_jobs(build):
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        df = build()
-        after = set(tracker.getJobIdsForGroup(None) or [])
-        return df, len(after - before)
-
-    lp, n = new_jobs(
-        lambda: label_propagation(nodes, edges, rounds=4, id_col="node")
+    lp, n = _new_jobs(
+        spark,
+        lambda: label_propagation(nodes, edges, rounds=4, id_col="node"),
     )
     # edge-cache warm count (AQE, ~3 jobs) + base eager + final-round
     # eager (+ slack) — the pre-fix shape ran 3-5 AQE materialization
@@ -525,13 +611,15 @@ def test_iterative_loops_compile_without_eager_round_jobs(spark):
     assert n <= 8, f"label_propagation construction ran {n} jobs"
     assert lp.count() == 8
 
-    kc, n = new_jobs(lambda: k_core(nodes, edges, k=2, rounds=8))
+    kc, n = _new_jobs(spark, lambda: k_core(nodes, edges, k=2, rounds=8))
     # edge-cache warm count + final-round eager + final_deg eager
     # (+ slack)
     assert n <= 8, f"k_core construction ran {n} jobs"
     assert kc.count() == 8
 
-    prd, n = new_jobs(lambda: pagerank(nodes, edges, iterations=3))
+    prd, n = _new_jobs(
+        spark, lambda: pagerank(nodes, edges, iterations=3)
+    )
     # nodes.count (AQE, outside the scope) + node_info eager + 3
     # dangling collects + final eager, with slack for Spark-internal
     # jobs — the pre-fix shape ran 3-5 AQE materialization jobs per

@@ -781,6 +781,42 @@ def test_dedup_recall_report_pins(spark, docs):
     assert rows["minhash_lsh"].n_candidates == len(cand)
 
 
+def test_dedup_recall_report_truth_equals_all_pairs(spark):
+    """dedup_recall_report takes its truth from the prefix chain, run
+    over the report's one shared shingle relation. At the report's
+    threshold that relation must equal the all-pairs
+    ngram_jaccard_pairs result row for row — otherwise a lossy prefix
+    filter would shrink the truth of every leg unnoticed."""
+    import inspect
+    from collections import Counter
+
+    from model_audit_spark.operators.dedup import (
+        dedup_recall_report,
+        ngram_jaccard_pairs,
+        ngram_jaccard_prefix_pairs,
+    )
+
+    defaults = inspect.signature(dedup_recall_report).parameters
+    n = defaults["shingle_n"].default
+    t = defaults["min_jaccard"].default
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    # near-dup families of 3 sharing boilerplate, plus an exact copy
+    texts = [(i, f"{base} variant {i // 3} tail words {i % 3}")
+             for i in range(12)]
+    texts.append((12, texts[0][1]))
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    sh = shingles_df(df, "text", "doc_id", n)
+    truth = Counter(
+        map(tuple, ngram_jaccard_prefix_pairs(
+            df, "text", "doc_id", n, t, shingles=sh
+        ).collect())
+    )
+    full = Counter(
+        map(tuple, ngram_jaccard_pairs(df, "text", "doc_id", n, t).collect())
+    )
+    assert len(truth) > 12 and truth == full
+
+
 def test_dedup_recall_report_zero_candidate_method_emits_row(spark):
     # disjoint docs: no near-dups at 0.5, no band collisions — every
     # method must still emit a row (zero counts, recall 0 via the

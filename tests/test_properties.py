@@ -1162,3 +1162,81 @@ def test_retry_classifier_never_fail_fasts_on_url_digits(port, status):
 
     with _pytest.raises(ValueError, match="auth"):
         _retry_call(auth_error, sleep=lambda s: None)
+
+
+# Pair graphs for the driver-vs-loop equivalence: random edges over a
+# small id space (duplicates and self-loops arise naturally), a chain of
+# up to 8 edges, and optionally reversed and repeated copies of edges.
+_PAIR_GRAPH = st.tuples(
+    st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=10
+    ),
+    st.integers(0, 8),
+    st.booleans(),
+).map(
+    lambda g: (lambda e: e + ([(b, a) for a, b in e[::2]] + e[1::3]
+                              if g[2] else []))(
+        g[0] + [(20 + i, 21 + i) for i in range(g[1])]
+    )
+)
+
+
+def _components_both_ways(build):
+    """(schema, row multiset) of build() on the driver path and with the
+    cluster gate at 0, which forces the distributed loop (and
+    dedup_decisions' window chain)."""
+    from collections import Counter
+
+    from model_audit_spark.operators import cluster
+
+    def run():
+        df = build()
+        return df.schema, Counter(map(tuple, df.collect()))
+
+    collected = run()
+    gate = cluster._COLLECT_MAX_PAIRS
+    cluster._COLLECT_MAX_PAIRS = 0
+    try:
+        return collected, run()
+    finally:
+        cluster._COLLECT_MAX_PAIRS = gate
+
+
+@given(edges=_PAIR_GRAPH)
+@_SETTINGS
+def test_collected_components_equal_the_loop(spark, edges):
+    from model_audit_spark.operators.cluster import connected_components
+
+    pairs = spark.createDataFrame(edges, "id_a LONG, id_b LONG")
+    collected, loop = _components_both_ways(
+        lambda: connected_components(pairs)
+    )
+    assert collected == loop
+
+
+@given(
+    edges=_PAIR_GRAPH,
+    qualities=st.lists(
+        st.sampled_from([None, 0.25, 0.5, 0.5, 0.75, "absent"]),
+        min_size=30, max_size=30,
+    ),
+)
+@_SETTINGS
+def test_collected_decisions_equal_the_window_chain(spark, edges, qualities):
+    """Row for row, including tied and NULL qualities, pair nodes with
+    no docs_quality row, and one output row per matching orientation
+    of a repeated or reversed pair."""
+    from model_audit_spark.operators.cluster import dedup_decisions
+
+    docs = spark.createDataFrame(
+        [(n, q) for n, q in enumerate(qualities) if q != "absent"],
+        "doc_id LONG, quality_score DOUBLE",
+    )
+    pairs = spark.createDataFrame(
+        [(a, b, 0.5 + (3 * a + b) % 5 / 10) for a, b in edges],
+        "id_a LONG, id_b LONG, jaccard DOUBLE",
+    )
+    collected, loop = _components_both_ways(
+        lambda: dedup_decisions(docs, pairs)
+    )
+    assert collected == loop
