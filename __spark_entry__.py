@@ -3833,14 +3833,32 @@ _CHECK_WINDOW = [
     "probe_style_consistency",
     "style_fingerprint",
     "verify_sources",
-    "detect_distribution",
+    "contamination_check",
+    "dedup_minhash_signatures",
+    "dedup_minhash_pairs",
     "dedup_clusters",
     "dedup_clusters_incremental",
+    "dedup_incremental",
+    "dedup_containment",
+    "dedup_jaccard_prefix",
+    "dedup_ngram_jaccard",
+    "dedup_threshold_sweep",
     "dedup_recall_report",
     "dedup_decisions",
+    "dup_graph_stats",
+    "pagerank_dupgraph",
+    "dedup_kcore",
+    "dedup_communities",
+    "community_modularity",
+    "community_source_nmi",
     "cluster_retention",
+    "source_overlap",
     "leakage_safe_splits",
+    "curate_corpus",
+    "detect_distribution",
+    "ngram_novelty",
     "effective_corpus_size",
+    "paragraph_near_dups",
     "style_count_distribution",
     "style_scores_long",
     "ann_param_sweep",
@@ -3854,32 +3872,14 @@ _CHECK_WINDOW = [
     "bpe_fertility64",
     "bpe_merges",
     "bpe_segments",
+    "cluster_quality",
+    "cluster_topics",
     "detect_documents",
     "dli_compare_sources",
+    "kmeans_clusters",
     "session_paths",
     "length_outliers",
     "length_percentiles",
-    "length_quantiles_exact",
-    "llmmap_compare_sources",
-    "llmmap_features_documents",
-    "llmmap_fingerprint_hashes",
-    "media_profile",
-    "mixing_plan",
-    "probe_category_counts",
-    "probes_filtered",
-    "weighted_sample_es",
-    "ann_sq8_rerank",
-    "ann_sq8_topk",
-    "conversation_transcripts",
-    "doc_chunks",
-    "embedding_dim_stats",
-    "events_pivot",
-    "label_separation",
-    "length_bucketed_batches",
-    "memorization_average",
-    "memorization_levenshtein",
-    "memorization_verbatim",
-    "pack_chunks",
 ]
 
 

@@ -22,7 +22,7 @@ Scale notes (100 TB):
 - Above the gate the distributed min-label loop runs. Each iteration is
   ONE shuffle: edges ⋈ labels on the node key, then a min-aggregate.
   Both sides are hash-partitioned on the same key count so
-  AQE/ReusedExchange can keep the edge side's layout across iterations.
+  ReusedExchange can keep the edge side's layout across iterations.
 - The loop's iteration count is the graph DIAMETER. LSH duplicate
   graphs are near-cliques (every member collides with most others in
   some band), so 2-4 iterations converge in practice. `max_iter` bounds
@@ -30,12 +30,16 @@ Scale notes (100 TB):
   raises RuntimeError instead of returning labels that are not the
   closure. For adversarial long-chain graphs, switch to the
   large-star/small-star variant (O(log n) rounds).
-- Convergence is checked with a driver-side count per iteration (the same
-  O(rounds) tiny actions GraphX/Pregel performs); each iteration's labels
-  are `localCheckpoint`ed so the LOGICAL plan is truncated every round —
-  persist alone caches data but lets the analyzed plan grow by two joins
-  per iteration, which turns Catalyst analysis super-linear after ~6
-  rounds. On a real cluster with a fault-tolerance requirement, swap in
+- The loop runs on persistence.pinned + iterate: the edge relation is
+  pinned (filled under the session conf, released on exit or error)
+  and each round's labels are lazily `localCheckpoint`ed, so the
+  LOGICAL plan is truncated every round — persist alone caches data
+  but lets the analyzed plan grow by two joins per iteration, which
+  turns Catalyst analysis super-linear after ~6 rounds. Convergence is
+  one driver-side count of changed labels per round (the same
+  O(rounds) tiny actions GraphX/Pregel performs), and that count is
+  the job that materializes the round's checkpoint. On a real cluster
+  with a fault-tolerance requirement, swap in
   `sparkContext.setCheckpointDir` + `.checkpoint()`.
 """
 
@@ -47,7 +51,7 @@ from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from model_audit_spark.persistence import lazy_checkpoint_scope, track
+from model_audit_spark.persistence import iterate, pinned, track
 
 __all__ = ["connected_components", "cluster_documents"]
 
@@ -157,66 +161,50 @@ def connected_components(
     edges_fwd = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     )
-    edges = (
-        edges_fwd.union(
-            edges_fwd.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
+    edges = edges_fwd.union(
+        edges_fwd.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        )
+    ).distinct()
+
+    def step(labels: DataFrame, i: int) -> DataFrame | None:
+        # from round 1 on, counting the input's changed labels is the
+        # round's one action (it materializes the input's checkpoint)
+        if i and labels.filter("_changed").count() == 0:
+            return None
+        if i == max_iter:
+            raise RuntimeError(
+                f"connected_components: labels still changing after "
+                f"max_iter={max_iter} rounds; raise max_iter"
+            )
+        nbr_min = (
+            edges.join(
+                labels.select(F.col("node").alias("src"), "comp"), "src"
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("comp").alias("nbr_comp"))
+        )
+        return labels.join(nbr_min, "node", "left").select(
+            "node",
+            F.least(
+                F.col("comp"), F.coalesce("nbr_comp", "comp")
+            ).alias("comp"),
+            (F.coalesce("nbr_comp", "comp") < F.col("comp")).alias(
+                "_changed"
+            ),
+        )
+
+    with pinned(edges):
+        seed = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select(
+                "node",
+                F.col("node").alias("comp"),
+                F.lit(True).alias("_changed"),
             )
         )
-        .distinct()
-        .persist()
-    )
-    # The INITIAL label relation checkpoints EAGERLY: round 1's
-    # convergence count references it from BOTH join legs, and two AQE
-    # stage threads racing to materialize the same un-materialized lazy
-    # checkpoint is the scheduler deadlock documented at
-    # persistence.lazy_checkpoint_scope. Every LATER round is safe lazy:
-    # that round's count() is the single action that materializes its
-    # own checkpoint before the next round's plan references it — so
-    # the loop keeps AQE (whose coalescing measurably helps the tiny
-    # per-round count jobs; the AQE-off form was A/B'd ~1s slower on
-    # the CC-family queries at sf0.1).
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("comp"))
-        .localCheckpoint()
-    )
-    try:
-        for _ in range(max_iter):
-            nbr_min = (
-                edges.join(
-                    labels.withColumnRenamed("node", "src"), "src"
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            new_labels = (
-                labels.join(nbr_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("comp"), F.coalesce("nbr_comp", "comp")
-                    ).alias("comp"),
-                    (F.coalesce("nbr_comp", "comp") < F.col("comp")).alias(
-                        "_changed"
-                    ),
-                )
-                # LAZY localCheckpoint truncates the plan immediately; the
-                # convergence count below is the round's ONE action and
-                # materializes the checkpoint as a side effect
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter("_changed").count()
-            labels = new_labels.drop("_changed")
-            if changed == 0:
-                return labels
-        raise RuntimeError(
-            f"connected_components: labels still changing after "
-            f"max_iter={max_iter} rounds; raise max_iter"
-        )
-    finally:
-        edges.unpersist()
+        return iterate(seed, step, max_iter + 1).drop("_changed")
 
 
 def cluster_documents(
@@ -621,16 +609,12 @@ def pagerank(
     ONCE into a checkpointed (node, outdeg) relation and `pr` carries
     `outdeg` forward — each round is then one (src-keyed) join edges⋈pr,
     one dst-keyed aggregate, and ONE collected BIGINT scalar (the
-    dangling mass, folded into the round expression as a literal — r12:
-    the broadcast form deadlocked the scheduler against the
-    broadcast-exchange thread over the lazy checkpoint; no per-round
-    pr⋈out_deg join, no per-round persist/unpersist pair — the r2/r3
-    shape spent a third of its wall-clock there). Each round's pr is
-    localCheckpoint'ed so the analyzed plan stays one round deep
-    (unrolled, Catalyst re-optimizes a growing tree every round and the
-    3-round plan was measured 10× slower than the checkpointed one);
-    every cached intermediate except the returned relation is released
-    before returning.
+    dangling mass, folded into the round expression as a literal; a
+    broadcast of it would race the scheduler over the lazy checkpoint,
+    see persistence.lazy_checkpoint_scope). The rounds run through
+    persistence.pinned + iterate (the unrolled 3-round plan was measured
+    10× slower than the checkpointed one); the pinned edge relation is
+    released before returning.
     """
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -638,77 +622,55 @@ def pagerank(
             F.col(id_col), F.lit(0).cast("long").alias("pr")
         )
     base = PAGERANK_SCALE * (100 - damping_pct) // 100 // n_nodes
-    e = edges.select(
-        F.col(src_col).alias("_u"), F.col(dst_col).alias("_v")
-    ).persist()
-    # fill the edge cache under the session conf (AQE for the
-    # corpus-sized upstream chain) before the AQE-off loop scope
-    e.count()
-    out_deg = e.groupBy(F.col("_u").alias("_du")).agg(
-        F.count("*").alias("outdeg")
-    )
-    # AQE-off scope (persistence.lazy_checkpoint_scope): the round plans
-    # compile without eager stage-materialization jobs, and the one
-    # per-round action below (the dangling-mass collect) is a
-    # single-threaded job that materializes the previous round's lazy
-    # checkpoint BEFORE anything else references it. The old shape
-    # crossJoin(F.broadcast(dang)) was the live deadlock caught under
-    # jstack this round: the broadcast-exchange thread computing `dang`
-    # raced the DAG scheduler over pr's un-materialized checkpoint
-    # (RDDCheckpointData vs RDD lock ordering).
-    with lazy_checkpoint_scope(nodes.sparkSession):
+    e = edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v"))
+
+    def step(pr: DataFrame, _: int) -> DataFrame:
+        # dangling mass is ONE BIGINT scalar per round — collect it
+        # (report-sized, the lloyd_kmeans precedent) and fold
+        # d DIV n_nodes into a literal: no broadcast exchange or cross
+        # join in any round, and the exact integer math is unchanged
+        # (Python // == SQL DIV for the non-negative mass sums)
+        d = pr.filter(F.col("outdeg").isNull()).agg(
+            F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("d")
+        ).collect()[0]["d"]
+        dang_share = int(d) // n_nodes
+        contrib = (
+            e.join(
+                pr.filter(F.col("outdeg").isNotNull()).select(
+                    F.col("_n").alias("_u2"),
+                    F.expr("pr DIV outdeg").alias("share"),
+                ),
+                F.col("_u") == F.col("_u2"),
+            )
+            .groupBy(F.col("_v").alias("_n"))
+            .agg(F.sum("share").cast("long").alias("c"))
+        )
+        return node_info.join(contrib, "_n", "left").select(
+            "_n", "outdeg",
+            (
+                F.lit(base)
+                + F.expr(
+                    f"({damping_pct} * (coalesce(c, 0) + "
+                    f"{dang_share}L)) DIV 100"
+                )
+            ).cast("long").alias("pr"),
+        )
+
+    with pinned(e):
+        out_deg = e.groupBy(F.col("_u").alias("_du")).agg(
+            F.count("*").alias("outdeg")
+        )
         node_info = (
             nodes.select(F.col(id_col).alias("_n"))
             .join(out_deg, F.col("_n") == F.col("_du"), "left")
             .select("_n", "outdeg")
             .localCheckpoint()
         )
-        pr = node_info.select(
+        seed = node_info.select(
             "_n", "outdeg",
             F.lit(PAGERANK_SCALE // n_nodes).cast("long").alias("pr"),
-        ).localCheckpoint(eager=False)
-        for it in range(iterations):
-            # dangling mass is ONE BIGINT scalar per round — collect it
-            # (report-sized, the lloyd_kmeans precedent) and fold
-            # d DIV n_nodes into a literal: the broadcast exchange and
-            # the cross join disappear from every round, and the exact
-            # integer math is unchanged (Python // == SQL DIV for the
-            # non-negative mass sums).
-            d = pr.filter(F.col("outdeg").isNull()).agg(
-                F.coalesce(F.sum("pr"), F.lit(0)).cast("long").alias("d")
-            ).collect()[0]["d"]
-            dang_share = int(d) // n_nodes
-            contrib = (
-                e.join(
-                    pr.filter(F.col("outdeg").isNotNull()).select(
-                        F.col("_n").alias("_u2"),
-                        F.expr("pr DIV outdeg").alias("share"),
-                    ),
-                    F.col("_u") == F.col("_u2"),
-                )
-                .groupBy(F.col("_v").alias("_n"))
-                .agg(F.sum("share").cast("long").alias("c"))
-            )
-            pr = (
-                node_info.join(contrib, "_n", "left")
-                .select(
-                    "_n", "outdeg",
-                    (
-                        F.lit(base)
-                        + F.expr(
-                            f"({damping_pct} * (coalesce(c, 0) + "
-                            f"{dang_share}L)) DIV 100"
-                        )
-                    ).cast("long").alias("pr"),
-                )
-                # intermediate rounds checkpoint LAZILY: Catalyst still
-                # sees a one-round-deep plan per round, and the final
-                # round stays eager so e can be unpersisted before
-                # returning (a lazy tail would re-evaluate an expensive
-                # caller edges relation 3×).
-                .localCheckpoint(eager=(it == iterations - 1))
-            )
-    e.unpersist()
+        )
+        pr = iterate(seed, step, iterations)
     return pr.select(F.col("_n").alias(id_col), "pr")
 
 
@@ -894,59 +856,41 @@ def label_propagation(
     requires modal support, so thin bridges don't merge dense groups.
     The pair an operator reads side by side before a destructive dedup.
 
-    Scale shape: `edges` (caller-symmetrized, both directions) persists
-    once; per round the label relation is localCheckpoint'ed LAZILY so
-    Catalyst sees a one-round-deep plan (eager on the final round so
-    `edges` can be unpersisted before returning — the pagerank
-    lifecycle, persistence release via the same discipline)."""
-    e = edges.select(
-        F.col(src_col).alias("_u"), F.col(dst_col).alias("_v")
-    ).persist()
-    # Materialize the edge cache UNDER THE SESSION CONF before entering
-    # the AQE-off scope: the caller's edge chain (at the gate, the full
-    # corpus-sized minhash verify) keeps AQE's skew-join/broadcast
-    # handling; the scope below then governs only the graph-bounded
-    # loop rounds, which scan the cached blocks.
-    e.count()
-    # AQE-off scope: intermediate rounds compile WITHOUT eager stage
-    # materialization, so the final round's eager checkpoint is the ONE
-    # job that computes the whole chained lineage single-threaded —
-    # both the checkpoint-race fix and the per-round-jobs fix (see
-    # persistence.lazy_checkpoint_scope).
-    with lazy_checkpoint_scope(nodes.sparkSession):
-        base = nodes.select(F.col(id_col).alias("_n")).localCheckpoint()
-        lab = base.select("_n", F.col("_n").alias("lbl")).localCheckpoint(
-            eager=False
+    Scale shape: `edges` (caller-symmetrized, both directions) is
+    pinned once and the rounds run through persistence.iterate, so
+    Catalyst sees a one-round-deep plan per round."""
+    e = edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v"))
+
+    def step(lab: DataFrame, _: int) -> DataFrame:
+        counts = (
+            e.join(
+                lab.select(F.col("_n").alias("_v2"), "lbl"),
+                F.col("_v") == F.col("_v2"),
+            )
+            .groupBy(F.col("_u"), F.col("lbl"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        for it in range(rounds):
-            counts = (
-                e.join(
-                    lab.select(F.col("_n").alias("_v2"), "lbl"),
-                    F.col("_v") == F.col("_v2"),
-                )
-                .groupBy(F.col("_u"), F.col("lbl"))
-                .agg(F.count(F.lit(1)).alias("cnt"))
+        winner = (
+            counts.groupBy("_u")
+            .agg(
+                F.min(
+                    F.struct(
+                        (-F.col("cnt")).alias("nc"),
+                        F.col("lbl").alias("l"),
+                    )
+                ).alias("w")
             )
-            winner = (
-                counts.groupBy("_u")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("cnt")).alias("nc"),
-                            F.col("lbl").alias("l"),
-                        )
-                    ).alias("w")
-                )
-                .select(F.col("_u").alias("_wn"), F.col("w.l").alias("wl"))
-            )
-            lab = (
-                base.join(winner, F.col("_n") == F.col("_wn"), "left")
-                .select(
-                    "_n", F.coalesce(F.col("wl"), F.col("_n")).alias("lbl")
-                )
-                .localCheckpoint(eager=(it == rounds - 1))
-            )
-    e.unpersist()
+            .select(F.col("_u").alias("_wn"), F.col("w.l").alias("wl"))
+        )
+        return base.join(winner, F.col("_n") == F.col("_wn"), "left").select(
+            "_n", F.coalesce(F.col("wl"), F.col("_n")).alias("lbl")
+        )
+
+    with pinned(e):
+        base = nodes.select(F.col(id_col).alias("_n")).localCheckpoint()
+        lab = iterate(
+            base.select("_n", F.col("_n").alias("lbl")), step, rounds
+        )
     return lab.select(
         F.col("_n").alias(id_col), F.col("lbl").alias("community")
     )
@@ -983,26 +927,20 @@ def k_core(
     (0 for peeled nodes) — the report column an operator sorts by to
     find the densest template cluster.
 
-    Scale shape: `edges` (caller-symmetrized) persists once; the peel
+    Scale shape: `edges` (caller-symmetrized) is pinned once; the peel
     is SEEDED with the distinct edge endpoints, not the full node set —
     a node with no edge has induced degree 0 < k and can never enter a
     core, and a node absent from round-1's degree aggregate is dropped
     by the same inner join either way, so the survivor sets are
     IDENTICAL round for round while every loop relation is bounded by
     the dup GRAPH (tiny at any corpus scale), never the corpus. Each
-    round is one edges⋈survivors semi-join per endpoint + one count
-    aggregate, all hash-partitioned on node id; survivor relations are
-    localCheckpoint'ed lazily (eager on the last round so `edges` can
-    be released — the pagerank lifecycle). Rounds shrink the survivor
-    relation monotonically, so per-round cost falls as the peel bites.
+    round (persistence.iterate) is one edges⋈survivors semi-join per
+    endpoint + one count aggregate, all hash-partitioned on node id.
+    Rounds shrink the survivor relation monotonically, so per-round
+    cost falls as the peel bites.
     The corpus-sized `nodes` relation appears only in the final report
     join (its small side broadcast by AQE), never inside the loop."""
-    e = edges.select(
-        F.col(src_col).alias("_u"), F.col(dst_col).alias("_v")
-    ).persist()
-    # fill the edge cache under the session conf (AQE for the
-    # corpus-sized upstream chain) before the AQE-off loop scope
-    e.count()
+    e = edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v"))
     base = nodes.select(F.col(id_col).alias("_n"))
 
     def _induced_deg(s: DataFrame) -> DataFrame:
@@ -1019,32 +957,27 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
 
-    # AQE-off scope: the peel compiles with zero construction jobs; the
-    # last round's eager checkpoint materializes all 8 rounds as ONE
-    # single-threaded job (checkpoint-race fix + per-round-jobs fix —
-    # see persistence.lazy_checkpoint_scope).
-    with lazy_checkpoint_scope(nodes.sparkSession):
-        surv = (
+    def step(surv: DataFrame, _: int) -> DataFrame:
+        return (
+            _induced_deg(surv)
+            .filter(F.col("deg") >= k)
+            .select("_u")
+            .withColumnRenamed("_u", "_n")
+        )
+
+    with pinned(e):
+        seed = (
             e.select("_u")
             .unionByName(e.select(F.col("_v").alias("_u")))
             .distinct()
             .withColumnRenamed("_u", "_n")
-            .localCheckpoint(eager=False)
         )
-        for it in range(rounds):
-            surv = (
-                _induced_deg(surv)
-                .filter(F.col("deg") >= k)
-                .select("_u")
-                .withColumnRenamed("_u", "_n")
-                .localCheckpoint(eager=(it == rounds - 1))
-            )
-        # Materialize the final-degree relation (survivor-sized) BEFORE
-        # releasing `e` — lazily it would re-derive the caller's edge
-        # chain (the full minhash verify at the gate) from source at
-        # action time.
+        surv = iterate(seed, step, rounds)
+        # the final-degree relation (survivor-sized) is materialized
+        # while `e` is still cached — lazily it would re-derive the
+        # caller's edge chain (the full minhash verify at the gate)
         final_deg = _induced_deg(surv).localCheckpoint()
-    out = (
+    return (
         base.join(
             surv.select(F.col("_n").alias("_in")),
             F.col("_n") == F.col("_in"),
@@ -1063,8 +996,6 @@ def k_core(
             .alias("core_deg"),
         )
     )
-    e.unpersist()
-    return out
 
 
 def adamic_adar_scores(

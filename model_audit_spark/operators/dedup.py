@@ -76,25 +76,22 @@ def shingles_df(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, sh ARRAY<STRING>): distinct word shingles, tokenized once."""
-    t = df.select(F.col(id_col), word_tokens(text_col).alias("_w"))
-    return t.select(
-        id_col, shingles_from_tokens("_w", shingle_n).alias("sh")
+    """(id, [keep_cols...,] sh ARRAY<STRING>): distinct word shingles,
+    tokenized once. `keep_cols` pass through untouched."""
+    t = df.select(
+        F.col(id_col), *keep_cols, word_tokens(text_col).alias("_w")
     )
-
-
-def word_shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Distinct n-word shingles straight from text (small inputs only —
-    prefer shingles_df, which avoids lambda re-evaluation of the tokenizer)."""
-    return shingles_from_tokens(word_tokens(text_col), n)
+    return t.select(
+        id_col, *keep_cols, shingles_from_tokens("_w", shingle_n).alias("sh")
+    )
 
 
 def _minhash_fold(hash_array: Column, num_hashes: int) -> Column:
     """Fold a shingle-hash array into a struct of k running affine-
-    permutation mins — the ONE signature kernel shared by the batch and
-    stateless/streaming paths (their outputs are equality-pinned in
-    tests). NULL/empty arrays fold to the MINHASH_PRIME sentinel init."""
+    permutation mins — the signature kernel of minhash_signatures.
+    NULL/empty arrays fold to the MINHASH_PRIME sentinel init."""
     coeffs = minhash_coeffs(num_hashes)
     init = F.struct(
         *[
@@ -124,21 +121,33 @@ def minhash_signatures(
     num_hashes: int = 16,
     shingle_n: int = 3,
     shingles: DataFrame | None = None,
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, mh_0..mh_{k-1} BIGINT): per-doc MinHash signature.
+    """(id, [keep_cols...,] mh_0..mh_{k-1} BIGINT): per-doc MinHash
+    signature.
 
-    ZERO-shuffle: the per-doc shingle array already exists (shingles_df
-    keeps one row per doc), so the signature is a pure projection —
-    one md5 per shingle → 32-bit int → k affine permutations folded
-    into a running-min struct within the row (`F.aggregate`, the same
-    fold the streaming stateless twin uses; min is order-independent so
-    the result is bit-identical to a hash aggregate). The r1-r3 shape
-    (explode → k-column min groupBy → restore join) shuffled the whole
-    (id, hash) relation and rescanned df for empty docs; docs with no
-    shingles now fold straight to the MINHASH_PRIME sentinel init (> any
-    hash value), so they keep a row and identical empty docs still
-    band-match (their pairs are later killed by jaccard_verify's
-    0-jaccard filter).
+    ZERO-shuffle and stateless: the per-doc shingle array already exists
+    (shingles_df keeps one row per doc), so the signature is a pure
+    projection — one md5 per shingle → 32-bit int → k affine
+    permutations folded into a running-min struct within the row
+    (`F.aggregate`; min is order-independent so the result is
+    bit-identical to a hash aggregate). The r1-r3 shape (explode →
+    k-column min groupBy → restore join) shuffled the whole (id, hash)
+    relation and rescanned df for empty docs; docs with no shingles now
+    fold straight to the MINHASH_PRIME sentinel init (> any hash value),
+    so they keep a row and identical empty docs still band-match (their
+    pairs are later killed by jaccard_verify's 0-jaccard filter). With
+    no explode, shuffle or state it is also legal under Structured
+    Streaming — the signing step of
+    streaming.streaming_near_dup_candidates. The md5 per shingle is
+    evaluated once (the hash array is the aggregate's input, referenced
+    once; the k-field struct expansion below stays a separate projection
+    because CollapseProject keeps non-cheap multi-referenced expressions
+    un-inlined).
+
+    `keep_cols` pass through untouched (e.g. the event-time column a
+    streaming caller needs for its watermark); a supplied `shingles`
+    relation must carry them.
 
     `shingles` (a shingles_df relation, ideally persisted) lets the
     sign→band→verify chain tokenize the corpus ONCE: pass the same
@@ -158,63 +167,18 @@ def minhash_signatures(
     rel = (
         shingles
         if shingles is not None
-        else shingles_df(df, text_col, id_col, shingle_n)
+        else shingles_df(df, text_col, id_col, shingle_n, keep_cols)
     )
     h = F.transform(
         F.col("sh"),
         lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
     )
     with_sig = rel.select(
-        F.col(id_col), _minhash_fold(h, num_hashes).alias("_sig")
+        F.col(id_col), *keep_cols, _minhash_fold(h, num_hashes).alias("_sig")
     )
     return with_sig.select(
         F.col(id_col),
-        *[
-            F.col("_sig").getField(f"mh_{i}").alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ],
-    )
-
-
-def minhash_signatures_stateless(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-ROW twin of minhash_signatures: identical (id, mh_0..mh_{k-1})
-    output (equality pinned in tests), computed as a pure projection —
-    F.aggregate folds the shingle-hash array into a struct of k running
-    mins, so there is no explode, no shuffle, and no state.
-
-    That makes it legal under Structured Streaming (stateless operators
-    only) — the signing step of the streaming near-dup probe
-    (streaming.streaming_near_dup_candidates) — and a zero-shuffle batch
-    alternative when the downstream op re-shuffles anyway. The fold
-    lambda computes k affine permutations per element; the md5 per
-    shingle is evaluated once (the hash array is the aggregate's input,
-    referenced once; the k-field struct expansion below stays a separate
-    projection because CollapseProject keeps non-cheap multi-referenced
-    expressions un-inlined). Empty/NULL text folds to the same
-    MINHASH_PRIME sentinel row as the batch aggregate's left join.
-
-    `keep_cols` pass through untouched (e.g. the event-time column a
-    streaming caller needs for its watermark)."""
-    sh = word_shingles(F.col(text_col), shingle_n)
-    h = F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
-    with_sig = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        _minhash_fold(h, num_hashes).alias("_sig"),
-    )
-    return with_sig.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
+        *keep_cols,
         *[
             F.col("_sig").getField(f"mh_{i}").alias(f"mh_{i}")
             for i in range(num_hashes)

@@ -1885,9 +1885,11 @@ def lloyd_kmeans(
     output is the last ASSIGNMENT) is skipped outright. The SQL twin
     unrolls the same rounds as MATERIALIZED CTEs.
     """
-    from model_audit_spark.persistence import lazy_checkpoint_scope
+    from model_audit_spark.persistence import pinned
 
-    q = quantize_micro(vectors, vec_col, id_col).persist()
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    q = quantize_micro(vectors, vec_col, id_col)
     draw = F.conv(
         F.substring(
             F.md5(
@@ -1901,15 +1903,10 @@ def lloyd_kmeans(
         16,
         10,
     ).cast("long")
-    # AQE-off scope for the whole round loop: each per-round collect is
-    # then ONE single-threaded job instead of several AQE
-    # stage-materialization jobs (persistence.lazy_checkpoint_scope —
-    # here purely the job-count half of that rationale; the loop
-    # carries no lazy checkpoints, so broadcasts stay enabled for the
-    # sums join). Results are AQE-invariant.
-    with lazy_checkpoint_scope(
-        vectors.sparkSession, disable_broadcast=False
-    ):
+    # pinned only, no iterate: the rounds carry centroids on the
+    # driver, not a relation; inside the scope each per-round collect
+    # is one job (persistence.lazy_checkpoint_scope)
+    with pinned(q):
         init_rows = (
             q.withColumn("_draw", draw)
             .orderBy("_draw", id_col)
@@ -1941,7 +1938,6 @@ def lloyd_kmeans(
                 + ")"
             )
 
-        assign = None
         for it in range(iterations):
             # argmin via transform-with-index over ONE folded 2-D
             # literal (constant py4j cost per round — the unrolled
@@ -1998,9 +1994,7 @@ def lloyd_kmeans(
                 .collect()
             )
             cents = [(int(r.cluster), list(r.c6)) for r in cent_rows]
-        out = assign.localCheckpoint()
-    q.unpersist()
-    return out
+        return assign.localCheckpoint()
 
 
 def kmeans_cluster_profile(

@@ -26,6 +26,12 @@ This module closes that gap with two small primitives:
   4.1), so a harness that ran ``clearCache()`` in between transparently
   rebuilds — a stale entry can never serve dropped blocks.
 
+The iterative operators share one loop lifecycle: ``pinned(df)`` holds
+an input the rounds rescan (cache filled under the session conf,
+released even when the body raises) and runs the body inside
+``lazy_checkpoint_scope``; ``iterate(seed, step, rounds)`` runs the
+checkpointed rounds.
+
 At 100 TB the same discipline applies unchanged — ``track``/``memo``
 wrap whatever StorageLevel the caller chose (MEMORY_AND_DISK spills;
 a real cluster would checkpoint the memoized relation instead to also
@@ -132,9 +138,9 @@ def fill_caches_concurrently(
     lazy_checkpoint_scope), and any relation they ALL scan should be
     filled BEFORE this call — concurrent legs racing a cold shared
     cache each recompute it into the same blocks (correct, wasted CPU).
-    Workers must not enter lazy_checkpoint_scope: its lock blocks every
-    other thread, so a worker entering a scope while the calling thread
-    holds one (and waits here) deadlocks the session.
+    Workers must not enter lazy_checkpoint_scope (pinned, iterate): its
+    lock blocks every other thread, so a worker entering a scope while
+    the calling thread holds one (and waits here) deadlocks the session.
     Job descriptions are thread-local, so each leg labels its own jobs
     in the UI. Exceptions propagate (first failure wins)."""
     from concurrent.futures import ThreadPoolExecutor
@@ -157,11 +163,10 @@ def fill_caches_concurrently(
 
 
 @contextmanager
-def lazy_checkpoint_scope(
-    spark, disable_broadcast: bool = True
-) -> Iterator[None]:
-    """Compile a lazy-localCheckpoint iteration under AQE-off (and, by
-    default, auto-broadcast-off).
+def lazy_checkpoint_scope(spark) -> Iterator[None]:
+    """Compile a lazy-localCheckpoint iteration under AQE-off and
+    auto-broadcast-off. Loops enter it through ``pinned`` (and
+    ``iterate``), never directly.
 
     Why this exists (r12, observed live under jstack): a lazily
     checkpointed RDD that is MATERIALIZED concurrently from two JVM
@@ -176,7 +181,7 @@ def lazy_checkpoint_scope(
     operator races broadcast/stage threads against the scheduler over
     the previous round's un-materialized checkpoint.
 
-    Inside this scope AQE is off AND (by default) auto-broadcast is off
+    Inside this scope AQE is off AND auto-broadcast is off
     (``spark.sql.autoBroadcastJoinThreshold=-1``). Both matter: with
     AQE off, ``.rdd`` conversion skips the eager stage materialization,
     but a STATIC plan containing a BroadcastHashJoin still runs its
@@ -196,13 +201,11 @@ def lazy_checkpoint_scope(
     ``spark.sql.shuffle.partitions``, which this repo derives from the
     core budget (session.py) — scale-adaptive, not a local-mode
     constant. Loop joins are graph-bounded, where sort-merge is the
-    right 100 TB default anyway; callers keep AQE's skew/broadcast
-    handling for the corpus-sized upstream by materializing their
-    persisted edge relation BEFORE entering the scope (the loop then
-    scans cached blocks). ``disable_broadcast=False`` is for loops with
-    NO lazy checkpoints (lloyd_kmeans: per-round driver collects) that
-    only want the job-count half. Session values are restored on exit
-    even if the loop raises.
+    right 100 TB default anyway; ``pinned`` keeps AQE's skew/broadcast
+    handling for the corpus-sized upstream by materializing the pinned
+    relation BEFORE entering the scope (the loop then scans cached
+    blocks). Session values are restored on exit even if the loop
+    raises.
 
     Concurrency contract (r13, VERDICT #8): the AQE/broadcast flips are
     SESSION-GLOBAL — Spark has no per-thread SQLConf — so a query that
@@ -230,27 +233,70 @@ def lazy_checkpoint_scope(
                 "spark.sql.autoBroadcastJoinThreshold", "10MB"
             )
             conf.set("spark.sql.adaptive.enabled", "false")
-            if disable_broadcast:
-                conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        elif disable_broadcast and (
-            conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
-        ):
-            # a nested scope asking for MORE isolation than the
-            # outermost (broadcasts still on) must fail loudly rather
-            # than silently keep broadcasts — the deadlock the scope
-            # exists to prevent would be back
-            raise RuntimeError(
-                "nested lazy_checkpoint_scope(disable_broadcast=True) "
-                "inside a broadcast-keeping scope"
-            )
+            conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         yield
     finally:
         if _scope_depth == 1:
             conf.set("spark.sql.adaptive.enabled", old)
-            if disable_broadcast:
-                conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
+            conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         _scope_depth -= 1
         _scope_lock.release()
+
+
+@contextmanager
+def pinned(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist `df`, fill its cache, and yield it inside
+    ``lazy_checkpoint_scope``; unpersist on exit, also when the body
+    raises.
+
+    The fill (one ``count()``) runs BEFORE the scope, under the session
+    conf, so the corpus-sized chain that produces `df` keeps AQE's
+    skew/broadcast handling; the body — a loop's rounds, plus any
+    scoped work before or after them that still scans `df` — runs
+    AQE-off over the cached blocks. Whatever the body returns must not
+    depend on `df` lazily: end it in an eager checkpoint (``iterate``
+    does) or materialize it before the block exits."""
+    df = df.persist()
+    try:
+        df.count()
+        with lazy_checkpoint_scope(df.sparkSession):
+            yield df
+    finally:
+        df.unpersist()
+
+
+def iterate(
+    seed: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame | None],
+    rounds: int,
+) -> DataFrame:
+    """Run ``state = step(state, i)`` for i in 0..rounds-1 from `seed`,
+    localCheckpointing every state so each round's plan stays one round
+    deep (an unrolled chain makes Catalyst re-optimize a growing tree
+    every round).
+
+    Cadence: the seed and every round checkpoint LAZILY and the last
+    round EAGERLY, so that one single-threaded job materializes the
+    whole chain — no round's checkpoint is ever materialized by two
+    threads at once (the r12 deadlock; see lazy_checkpoint_scope, which
+    this enters). `step` may run an action on its input (a convergence
+    count, a collected scalar): the action is then the one job that
+    materializes that input before the next round references it. A
+    step that returns None stops the loop, and its input — already
+    materialized by the step's action — is the result.
+
+    Raises ValueError when `rounds` < 1: there would be no eager round
+    to materialize the seed."""
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+    with lazy_checkpoint_scope(seed.sparkSession):
+        state = seed.localCheckpoint(eager=False)
+        for i in range(rounds):
+            nxt = step(state, i)
+            if nxt is None:
+                break
+            state = nxt.localCheckpoint(eager=(i == rounds - 1))
+    return state
 
 
 def track_view(spark, name: str) -> str:

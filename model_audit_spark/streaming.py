@@ -197,7 +197,7 @@ def streaming_near_dup_candidates(
     within: str = "10 minutes",
 ) -> DataFrame:
     """Streaming near-dup FLAGGING against a persisted LSH index: each
-    arriving doc is signed per-row (minhash_signatures_stateless — a pure
+    arriving doc is signed per-row (minhash_signatures — a pure
     projection, legal in streaming), its band hashes stream-static join
     the index built by dedup.minhash_index_write, and the first match per
     doc is emitted as (id, ts, matched index doc, band).
@@ -215,10 +215,10 @@ def streaming_near_dup_candidates(
     batch-internal pairs are found."""
     from model_audit_spark.operators.dedup import (
         lsh_band_rows,
-        minhash_signatures_stateless,
+        minhash_signatures,
     )
 
-    sigs = minhash_signatures_stateless(
+    sigs = minhash_signatures(
         stream,
         text_col,
         id_col,

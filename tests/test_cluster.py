@@ -580,54 +580,109 @@ def test_partition_label_nmi_aligned_and_independent(spark):
     assert partition_label_nmi(one, onecat).collect()[0].nmi is None
 
 
-def test_iterative_loops_compile_without_eager_round_jobs(spark):
+def test_iterative_loops_compile_without_eager_round_jobs(
+    spark, monkeypatch
+):
     """r12 deadlock-fix contract (persistence.lazy_checkpoint_scope):
-    the LP / k-core / pagerank loops compile their rounds under AQE-off,
-    so construction launches a small BOUNDED number of jobs (the eager
-    base/final checkpoints and pagerank's per-round 1-row collects) —
-    not the 3-5 AQE stage-materialization jobs per round whose
-    concurrent lazy-checkpoint materialization deadlocked the scheduler
-    against a broadcast-exchange thread (caught live under jstack).
-    The AQE session conf must also be restored afterwards."""
+    the CC fallback / LP / k-core / pagerank / Lloyd loops compile their
+    rounds under AQE-off, so construction launches a small BOUNDED
+    number of jobs (the pinned relation's fill, eager checkpoints and
+    the per-round actions) — not the 3-5 AQE stage-materialization jobs
+    per round whose concurrent lazy-checkpoint materialization
+    deadlocked the scheduler against a broadcast-exchange thread
+    (caught live under jstack). The AQE and broadcast session confs
+    must also be restored afterwards."""
     from model_audit_spark.operators.cluster import (
         k_core,
         label_propagation,
         pagerank,
     )
+    from model_audit_spark.operators.similarity import lloyd_kmeans
 
+    conf = (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    )
     edges = spark.createDataFrame(
         [(a, b) for a in range(1, 9) for b in range(1, 9) if a != b],
         "src long, dst long",
     )
     nodes = spark.range(1, 9).select(F.col("id").alias("node"))
 
+    # measured on local[4]: 5, 5, 10, 7 and 9 jobs in the order below;
+    # the bounds keep slack for Spark-internal jobs
     lp, n = _new_jobs(
         spark,
         lambda: label_propagation(nodes, edges, rounds=4, id_col="node"),
     )
-    # edge-cache warm count (AQE, ~3 jobs) + base eager + final-round
-    # eager (+ slack) — the pre-fix shape ran 3-5 AQE materialization
-    # jobs per round ON TOP of these
+    # edge fill (AQE) + base eager + final-round eager
     assert n <= 8, f"label_propagation construction ran {n} jobs"
     assert lp.count() == 8
 
     kc, n = _new_jobs(spark, lambda: k_core(nodes, edges, k=2, rounds=8))
-    # edge-cache warm count + final-round eager + final_deg eager
-    # (+ slack)
+    # edge fill + final-round eager + final_deg eager
     assert n <= 8, f"k_core construction ran {n} jobs"
     assert kc.count() == 8
 
     prd, n = _new_jobs(
         spark, lambda: pagerank(nodes, edges, iterations=3)
     )
-    # nodes.count (AQE, outside the scope) + node_info eager + 3
-    # dangling collects + final eager, with slack for Spark-internal
-    # jobs — the pre-fix shape ran 3-5 AQE materialization jobs per
-    # round on top of these
+    # nodes.count + edge fill + node_info eager + 3 dangling collects
+    # + final eager
     assert n <= 14, f"pagerank construction ran {n} jobs"
     assert prd.count() == 8
 
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    monkeypatch.setattr(cluster_mod, "_COLLECT_MAX_PAIRS", 0)
+    cc, n = _new_jobs(
+        spark, lambda: connected_components(edges, "src", "dst")
+    )
+    # gate probe + edge fill + one changed-label count per round
+    assert n <= 10, f"connected_components fallback ran {n} jobs"
+    assert {r.comp for r in cc.collect()} == {1}
+
+    rows = [(i, [1.0, 1.0, 0.0, 0.0]) for i in range(10)]
+    rows += [(100 + i, [-1.0, -1.0, 0.0, 0.0]) for i in range(10)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    km, n = _new_jobs(spark, lambda: lloyd_kmeans(vecs, k=2, iterations=3))
+    # fill + init collect + 2 centroid collects + output checkpoint
+    assert n <= 12, f"lloyd_kmeans construction ran {n} jobs"
+    assert km.count() == 20
+
+    assert (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    ) == conf
+
+
+@pytest.mark.parametrize(
+    "loop", ["pagerank", "label_propagation", "k_core", "lloyd_kmeans"]
+)
+def test_loops_reject_non_positive_rounds(spark, loop):
+    """A zero round budget fails with ValueError instead of returning
+    an unrefined relation."""
+    from model_audit_spark.operators.cluster import (
+        k_core,
+        label_propagation,
+        pagerank,
+    )
+    from model_audit_spark.operators.similarity import lloyd_kmeans
+
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    nodes = spark.range(1, 3).select(F.col("id").alias("node"))
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    call = {
+        "pagerank": lambda: pagerank(nodes, edges, iterations=0),
+        "label_propagation": lambda: label_propagation(
+            nodes, edges, rounds=0
+        ),
+        "k_core": lambda: k_core(nodes, edges, rounds=0),
+        "lloyd_kmeans": lambda: lloyd_kmeans(vecs, k=2, iterations=0),
+    }[loop]
+    with pytest.raises(ValueError, match="must be >= 1, got 0"):
+        call()
 
 
 def test_lazy_checkpoint_scope_restores_conf_on_error(spark):

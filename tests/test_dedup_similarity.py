@@ -468,12 +468,14 @@ def test_incremental_matches_batch_recompute(spark, tmp_path):
 
 
 def test_stateless_signatures_equal_batch_aggregate(spark):
-    """minhash_signatures_stateless (pure projection — the streaming-legal
-    signer) must be row-identical to the explode+groupBy batch aggregate,
-    including NULL/empty/short-doc sentinel rows."""
+    """minhash_signatures is the one signer of batch and streaming
+    callers: `keep_cols` ride through untouched (the streaming probe's
+    event-time column) without changing any signature, and NULL, empty
+    and short docs keep a row holding the MINHASH_PRIME sentinel."""
     from model_audit_spark.operators.dedup import (
+        MINHASH_PRIME,
         minhash_signatures,
-        minhash_signatures_stateless,
+        shingles_df,
     )
 
     docs = spark.createDataFrame(
@@ -487,13 +489,21 @@ def test_stateless_signatures_equal_batch_aggregate(spark):
         ],
         "doc_id int, text string",
     )
-    a = minhash_signatures(docs).orderBy("doc_id").collect()
-    b = minhash_signatures_stateless(docs).orderBy("doc_id").collect()
-    assert a == b
-    # keep_cols pass through untouched
-    with_ts = docs.withColumn("ts", F.current_timestamp())
-    out = minhash_signatures_stateless(with_ts, keep_cols=("ts",))
-    assert out.columns[:2] == ["doc_id", "ts"]
+    plain = minhash_signatures(docs).orderBy("doc_id").collect()
+    sigs = [tuple(r)[1:] for r in plain]
+    assert sigs[0] == sigs[1] != sigs[2]
+    assert sigs[3:] == [(MINHASH_PRIME,) * 16] * 3
+    with_ts = docs.withColumn("ts", F.col("doc_id") * 10)
+    kept = minhash_signatures(with_ts, keep_cols=("ts",))
+    assert kept.columns[:3] == ["doc_id", "ts", "mh_0"]
+    rows = kept.orderBy("doc_id").collect()
+    assert [r.ts for r in rows] == [10 * r.doc_id for r in plain]
+    assert [r[:1] + r[2:] for r in rows] == [tuple(r) for r in plain]
+    # a supplied shingle relation carries the kept columns
+    sh = shingles_df(with_ts, keep_cols=("ts",))
+    assert sh.columns == ["doc_id", "ts", "sh"]
+    again = minhash_signatures(with_ts, shingles=sh, keep_cols=("ts",))
+    assert again.orderBy("doc_id").collect() == rows
 
 
 def test_multiprobe_recall_supersets_single_bucket(spark):

@@ -6,6 +6,9 @@ the storage blocks, and an external clearCache() can never make the
 memo serve stale (dropped) blocks — it rebuilds.
 """
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -229,20 +232,6 @@ def test_nested_lazy_checkpoint_scope_restores_once(spark):
     )
 
 
-def test_nested_scope_demanding_more_isolation_fails_loudly(spark):
-    """A broadcast-disabling scope nested inside a broadcast-KEEPING
-    scope cannot be honored (the outer already saved the session state)
-    — it must raise, not silently leave broadcasts on."""
-    from model_audit_spark.persistence import lazy_checkpoint_scope
-
-    before = spark.conf.get("spark.sql.adaptive.enabled")
-    with pytest.raises(RuntimeError, match="nested"):
-        with lazy_checkpoint_scope(spark, disable_broadcast=False):
-            with lazy_checkpoint_scope(spark, disable_broadcast=True):
-                pass  # pragma: no cover
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before
-
-
 def test_concurrent_compile_inside_scope_is_correct(spark):
     """r13 (VERDICT #8) concurrency contract: a query another thread
     builds+runs while a scope is active sees AQE/broadcast off — a
@@ -326,3 +315,102 @@ def test_fill_caches_concurrently_fills_every_leg(spark):
     ok = persistence.track(spark.range(7).persist())
     with pytest.raises(Exception, match="leg failed"):
         persistence.fill_caches_concurrently([ok, boom])
+
+
+def _scope_conf(spark):
+    return (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    )
+
+
+def test_loops_release_pinned_relation_on_error(spark):
+    """A loop body that raises still unpersists the pinned relation and
+    restores the session conf: label_propagation and k_core on a missing
+    id column, and a step that raises inside pinned + iterate."""
+    from pyspark.errors import AnalysisException
+
+    from model_audit_spark.operators.cluster import k_core, label_propagation
+
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    nodes = spark.range(1, 3).select(F.col("id").alias("node"))
+    spark.catalog.clearCache()
+    base = _n_persistent_rdds(spark)
+    conf = _scope_conf(spark)
+    for loop in (label_propagation, k_core):
+        with pytest.raises(AnalysisException):
+            loop(nodes, edges, id_col="missing")
+        assert _n_persistent_rdds(spark) == base, loop.__name__
+        assert _scope_conf(spark) == conf, loop.__name__
+
+    def step(state, i):
+        if i == 1:
+            raise RuntimeError("boom")
+        return state.select((F.col("id") + 1).alias("id"))
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with persistence.pinned(spark.range(10)) as rel:
+            assert persistence._is_live(rel)
+            persistence.iterate(rel, step, 3)
+    assert not persistence._is_live(rel)
+    assert _scope_conf(spark) == conf
+
+
+def test_iterate_rounds_and_early_stop(spark):
+    """iterate runs `rounds` steps, and a step returning None stops the
+    loop with that step's input as the result."""
+    seed = spark.range(3)
+
+    def plus1(s, i):
+        return s.select((F.col("id") + 1).alias("id"))
+
+    def stop_at_2(s, i):
+        return None if i == 2 else plus1(s, i)
+
+    with persistence.pinned(seed):
+        out = persistence.iterate(seed, plus1, 4)
+        assert sorted(r.id for r in out.collect()) == [4, 5, 6]
+        out = persistence.iterate(seed, stop_at_2, 5)
+        assert sorted(r.id for r in out.collect()) == [2, 3, 4]
+
+
+def _calls(node, fn=None):
+    """(innermost enclosing function name, Call node) for every call."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _calls(child, child.name)
+            continue
+        if isinstance(child, ast.Call):
+            yield fn, child
+        yield from _calls(child, fn)
+
+
+def test_only_persistence_runs_checkpointed_loops():
+    """The loop lifecycle lives in one place: no module but
+    persistence.py enters lazy_checkpoint_scope, and lazy
+    localCheckpoints appear only there and in bpe._merge_loop (whose
+    every-few-merges cadence over a vocabulary-sized relation iterate
+    does not cover)."""
+    root = Path(persistence.__file__).resolve().parent.parent
+    files = sorted((root / "model_audit_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    scope_calls, lazy_ckpts = set(), set()
+    for path in files:
+        rel = path.relative_to(root).as_posix()
+        for fn, call in _calls(ast.parse(path.read_text())):
+            f = call.func
+            name = getattr(f, "attr", None) or getattr(f, "id", None)
+            if name == "lazy_checkpoint_scope":
+                scope_calls.add(rel)
+            if name == "localCheckpoint" and any(
+                k.arg == "eager"
+                and isinstance(k.value, ast.Constant)
+                and k.value.value is False
+                for k in call.keywords
+            ):
+                lazy_ckpts.add((rel, fn))
+    assert scope_calls == {"model_audit_spark/persistence.py"}
+    assert lazy_ckpts == {
+        ("model_audit_spark/persistence.py", "iterate"),
+        ("model_audit_spark/operators/bpe.py", "_merge_loop"),
+    }

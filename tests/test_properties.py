@@ -360,22 +360,6 @@ def test_phrase_search_occurrences_bounded_by_tokens(spark, texts):
     assert got == want
 
 
-@given(texts=st.lists(_TEXT, min_size=1, max_size=10))
-@_SETTINGS
-def test_stateless_signatures_always_equal_batch(spark, texts):
-    """The streaming-legal per-row signer and the batch aggregate agree
-    on arbitrary unicode soup (the equality the streaming probe needs)."""
-    from model_audit_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_stateless,
-    )
-
-    docs = _docs(spark, texts)
-    a = minhash_signatures(docs).orderBy("doc_id").collect()
-    b = minhash_signatures_stateless(docs).orderBy("doc_id").collect()
-    assert a == b
-
-
 @given(
     n=st.integers(min_value=1, max_value=200),
     fracs=st.lists(
