@@ -3831,32 +3831,44 @@ def _burstiness_profile(spark, sf):
 # window; opportunistic refreshes fill the remaining slots.
 _CHECK_WINDOW = [
     "probe_style_consistency",
+    "streaming_source_verdict",
     "style_fingerprint",
     "verify_sources",
+    "dsir_select",
+    "dsir_weights",
+    "span_dedup",
+    "top_boilerplate_spans",
+    "budget_select",
+    "collocations",
     "contamination_check",
+    "corpus_drift",
+    "quality_calibrated",
+    "quality_threshold_sweep",
+    "source_data_card",
+    "streaming_drift",
+    "text_stats",
+    "watermark_documents",
+    "winnow_fingerprints",
     "dedup_minhash_signatures",
     "dedup_minhash_pairs",
     "dedup_clusters",
     "dedup_clusters_incremental",
     "dedup_incremental",
-    "dedup_containment",
-    "dedup_jaccard_prefix",
     "dedup_ngram_jaccard",
     "dedup_threshold_sweep",
-    "dedup_recall_report",
     "dedup_decisions",
     "dup_graph_stats",
-    "pagerank_dupgraph",
-    "dedup_kcore",
-    "dedup_communities",
-    "community_modularity",
-    "community_source_nmi",
     "cluster_retention",
     "source_overlap",
     "leakage_safe_splits",
     "curate_corpus",
     "detect_distribution",
+    "dli_bigrams_by_source",
+    "dli_features_by_source",
     "ngram_novelty",
+    "quality_repetition",
+    "winnow_pairs",
+    "winnow_span_report",
     "effective_corpus_size",
     "paragraph_near_dups",
     "style_count_distribution",
@@ -3868,18 +3880,6 @@ _CHECK_WINDOW = [
     "benchmark_accuracy",
     "benchmark_accuracy_by_class",
     "benchmark_detect",
-    "bpe_merges64",
-    "bpe_fertility64",
-    "bpe_merges",
-    "bpe_segments",
-    "cluster_quality",
-    "cluster_topics",
-    "detect_documents",
-    "dli_compare_sources",
-    "kmeans_clusters",
-    "session_paths",
-    "length_outliers",
-    "length_percentiles",
 ]
 
 

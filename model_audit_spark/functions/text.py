@@ -11,6 +11,13 @@ mcp_server.py:446-474) including their Python edge cases:
 - `re.MULTILINE` anchors (expressed via the (?m) inline flag),
 - Python `\\w` (Unicode word chars) expressed as [\\p{L}\\p{N}_] which both
   Java regex and DuckDB's RE2 interpret identically.
+
+Construction: small helpers with a fixed number of calls (words,
+word_tokens, detect_lang, text_preview) are DSL and take any Column.
+Builders that loop over a catalog or over n (contains_any, ngrams over a
+named column) are ONE parsed SQL string — each DSL call is a py4j round
+trip, and the loops dominated driver-side build time. Their text quotes
+catalog strings with similarity.sql_str and names with sql_ident.
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from model_audit_spark.catalogs import (
     REFUSAL_OPENERS,
     STYLE_MARKERS,
 )
+from model_audit_spark.operators.similarity import sql_ident, sql_str
 
 # Unicode-portable equivalent of Python's \w (see module docstring).
 WORD_CHARS = r"[\p{L}\p{N}_]+"
@@ -77,13 +85,15 @@ def count_substr(col: Column | str, needle: str) -> Column:
     )
 
 
-def contains_any(col: Column | str, needles: list[str]) -> Column:
-    """True iff any literal needle is a substring (Python `any(n in s)`)."""
-    c = _c(col)
-    out = F.lit(False)
-    for n in needles:
-        out = out | c.contains(n)
-    return out
+def contains_any(col_sql: str, needles: list[str]) -> Column:
+    """True iff any literal needle is a substring (Python `any(n in s)`)
+    of the value `col_sql` (SQL text: a column name or an expression
+    over one). One parsed `false OR contains(..) OR ..` chain."""
+    return F.expr(
+        " OR ".join(
+            ["false"] + [f"contains({col_sql}, {sql_str(n)})" for n in needles]
+        )
+    )
 
 
 def word_tokens(col: Column | str) -> Column:
@@ -91,22 +101,38 @@ def word_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(_c(col)), F.lit(WORD_CHARS), 0)
 
 
-def ngrams(words_col: Column, n: int = 2) -> Column:
-    """Adjacent n-word grams joined by a space (F17, reference dli.py:27-33).
+def ngrams_sql(words_sql: str, n: int = 2) -> str:
+    """SQL text of the adjacent n-word grams of the token array
+    `words_sql`, joined by a space (F17, reference dli.py:27-33).
 
-    Built as arrays_zip over n shifted slices so the tokens array is
-    referenced a CONSTANT number of times — per-element element_at lambdas
-    get the token-array expression inlined by CollapseProject around
-    Generate/Aggregate nodes, turning tokenization O(n²)."""
+    arrays_zip over n shifted slices, so the tokens array is referenced
+    a CONSTANT number of times — per-element element_at lambdas get the
+    token-array expression inlined by CollapseProject around
+    Generate/Aggregate nodes, turning tokenization O(n²). SQL cannot
+    alias arrays_zip's arguments, so the zipped fields carry their
+    positional names `0`..`n-1`."""
+    m = f"greatest(size({words_sql}) - {n - 1}, 0)"
+    parts = ", ".join(f"slice({words_sql}, {i + 1}, {m})" for i in range(n))
+    fields = ", ".join(f"t.`{i}`" for i in range(n))
+    return f"transform(arrays_zip({parts}), t -> concat_ws(' ', {fields}))"
+
+
+def ngrams(words_col: Column | str, n: int = 2) -> Column:
+    """Adjacent n-word grams of a token array (ngrams_sql). A column
+    name builds ONE parsed expression — the hot path: operators stage
+    their tokens as a named column. A Column cannot be embedded in SQL
+    text, so a Column input builds the same expression from DSL calls
+    (same plan, pinned by test_ngrams_column_and_name_forms_plan_alike)."""
+    if isinstance(words_col, str):
+        return F.expr(ngrams_sql(sql_ident(words_col), n))
     m = F.greatest(F.size(words_col) - (n - 1), F.lit(0))
-    parts = [F.slice(words_col, i + 1, m).alias(f"_g{i}") for i in range(n)]
-    zipped = F.arrays_zip(*parts)
+    zipped = F.arrays_zip(*[F.slice(words_col, i + 1, m) for i in range(n)])
     return F.transform(
-        zipped, lambda t: F.concat_ws(" ", *[t[f"_g{i}"] for i in range(n)])
+        zipped, lambda t: F.concat_ws(" ", *[t[str(i)] for i in range(n)])
     )
 
 
-def bigrams(words_col: Column) -> Column:
+def bigrams(words_col: Column | str) -> Column:
     """Adjacent word pairs joined by a space (F17, reference dli.py:27-33)."""
     return ngrams(words_col, 2)
 
@@ -303,7 +329,9 @@ def style_flag_columns(text_col: str = "text") -> dict[str, Column]:
         "has_numbered": c.rlike(r"(?m)^\s*\d+[.)]\s"),
         "has_code_blocks": c.contains("```"),
         "is_verbose": F.size(words(lo)) > 150,
-        "has_refusal_hint": contains_any(lo, REFUSAL_HINTS),
+        "has_refusal_hint": contains_any(
+            f"lower({sql_ident(text_col)})", REFUSAL_HINTS
+        ),
     }
 
 
@@ -321,8 +349,8 @@ def text_preview(col: Column | str, max_len: int = 80) -> Column:
 # DLI response-level predicates (reference dli.py:83-110)
 # ---------------------------------------------------------------------------
 
-def dli_refusal_flag(col: Column | str) -> Column:
-    return contains_any(F.lower(_c(col)), DLI_REFUSAL_PHRASES)
+def dli_refusal_flag(text_col: str) -> Column:
+    return contains_any(f"lower({sql_ident(text_col)})", DLI_REFUSAL_PHRASES)
 
 
 def dli_hedging_count(lower_col: Column) -> Column:

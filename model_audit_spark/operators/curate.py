@@ -24,7 +24,7 @@ the corpus).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from model_audit_spark.operators.dedup import (
@@ -33,6 +33,7 @@ from model_audit_spark.operators.dedup import (
     minhash_signatures,
     shingles_df,
 )
+from model_audit_spark.operators.similarity import sql_ident, sql_num, sql_str
 from model_audit_spark.persistence import track
 from model_audit_spark.operators.text_analysis import with_doc_stats
 
@@ -45,19 +46,23 @@ def curate_corpus(
     langs: tuple[str, ...] = ("en",),
     min_jaccard: float = 0.5,
 ) -> DataFrame:
-    """(id, lang_pred, quality_score, drop_reason, kept) for every doc."""
+    """(id, lang_pred, quality_score, drop_reason, kept) for every doc.
+
+    The per-row expressions (hash, keep-first rank, reason CASE) are SQL
+    text parsed once each — one py4j call instead of one per operator."""
+    idc = sql_ident(id_col)
     base = with_doc_stats(
         docs.select(F.col(id_col), F.col(text_col)),
         text_col,
         names=["quality_score", "lang_pred"],
-    ).select(
-        F.col(id_col),
-        "quality_score",
-        "lang_pred",
-        F.md5(F.col(text_col)).alias("text_hash"),
+    ).selectExpr(
+        idc, "quality_score", "lang_pred",
+        f"md5({sql_ident(text_col)}) AS text_hash",
     )
-    w = Window.partitionBy("text_hash").orderBy(id_col)
-    flagged = base.withColumn("is_first", F.row_number().over(w) == 1)
+    flagged = base.withColumn(
+        "is_first",
+        F.expr(f"row_number() OVER (PARTITION BY text_hash ORDER BY {idc}) = 1"),
+    )
 
     # ONE persisted shingle relation feeds both the minhash aggregate
     # and the exact Jaccard verify (minhash_signatures `shingles=`):
@@ -76,17 +81,21 @@ def curate_corpus(
         min_jaccard=min_jaccard, shingles=shing,
     )
     near = (
-        pairs.select(F.col("id_b").alias(id_col))
+        pairs.selectExpr(f"id_b AS {idc}")
         .distinct()
         .withColumn("is_near_dup", F.lit(True))
     )
 
     out = flagged.join(F.broadcast(near), id_col, "left")
-    reason = (
-        F.when(~F.col("lang_pred").isin(list(langs)), "lang")
-        .when(F.col("quality_score") < min_quality, "quality")
-        .when(~F.col("is_first"), "exact_dup")
-        .when(F.col("is_near_dup"), "near_dup")
+    lang_ok = (
+        f"lang_pred IN ({', '.join(sql_str(x) for x in langs)})"
+        if langs else "false"
+    )
+    reason = F.expr(
+        f"CASE WHEN NOT ({lang_ok}) THEN 'lang' "
+        f"WHEN quality_score < {sql_num(min_quality)} THEN 'quality' "
+        "WHEN NOT is_first THEN 'exact_dup' "
+        "WHEN is_near_dup THEN 'near_dup' END"
     )
     return out.select(
         F.col(id_col),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from model_audit_spark.operators.dedup import shingles_df
+from model_audit_spark.operators.similarity import sql_ident
 
 
 def eval_shingle_hashes(
@@ -45,9 +46,9 @@ def eval_shingle_hashes(
     Generate, so the array is built once."""
     return (
         shingles_df(eval_df, text_col, id_col, shingle_n)
-        .select(F.explode_outer("sh").alias("_s"))
-        .filter(F.col("_s").isNotNull())
-        .select(F.md5("_s").alias("_h"))
+        .selectExpr("explode_outer(sh) AS _s")
+        .filter("_s IS NOT NULL")
+        .selectExpr("md5(_s) AS _h")
         .distinct()
     )
 
@@ -72,23 +73,18 @@ def contamination(
         ev = F.broadcast(ev)
     # explode_outer + null-drop: see eval_shingle_hashes (avoids the
     # inferred size(sh) > 0 filter re-building the shingle array)
-    long = shingles_df(train_df, text_col, id_col, shingle_n).select(
-        id_col,
-        F.size("sh").cast("long").alias("n_sh"),
-        F.explode_outer("sh").alias("_s"),
-    ).filter(F.col("_s").isNotNull())
-    hashed = long.select(id_col, "n_sh", F.md5("_s").alias("_h"))
+    idc = sql_ident(id_col)
+    long = shingles_df(train_df, text_col, id_col, shingle_n).selectExpr(
+        idc, "CAST(size(sh) AS BIGINT) AS n_sh", "explode_outer(sh) AS _s"
+    ).filter("_s IS NOT NULL")
+    hashed = long.selectExpr(idc, "n_sh", "md5(_s) AS _h")
     return (
         hashed.join(ev, "_h")
         .groupBy(id_col, "n_sh")
-        .agg(F.count("*").alias("n_overlap"))
-        .select(
-            id_col,
-            "n_sh",
-            "n_overlap",
-            F.round(
-                F.col("n_overlap") / F.greatest(F.col("n_sh"), F.lit(1)), 6
-            ).alias("overlap_frac"),
+        .agg(F.expr("count(*) AS n_overlap"))
+        .selectExpr(
+            idc, "n_sh", "n_overlap",
+            "round(n_overlap / greatest(n_sh, 1), 6) AS overlap_frac",
         )
     )
 

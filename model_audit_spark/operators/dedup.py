@@ -26,12 +26,36 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from model_audit_spark.functions.text import ngrams, word_tokens
+from model_audit_spark.functions.text import ngrams, ngrams_sql, word_tokens
+from model_audit_spark.operators.similarity import sql_ident, sql_num
 from model_audit_spark.persistence import fill_caches_concurrently, track
 
 # Smallest prime > 2^32; minhash permutation modulus and the sentinel
 # signature value for documents with no shingles.
 MINHASH_PRIME = 4294967311
+
+
+def check_lsh_params(num_hashes: int, bands: int = 1) -> None:
+    """Raise ValueError unless `bands` LSH bands split `num_hashes`
+    MinHash values evenly (rows_per_band = num_hashes // bands >= 1, no
+    value left out) — the entry check of every signing/banding
+    operator."""
+    if num_hashes < 1:
+        raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
+    if bands < 1:
+        raise ValueError(f"bands must be >= 1, got {bands}")
+    if bands > num_hashes or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes} evenly"
+        )
+
+
+# In-bucket pair expansion over a sorted id array `ids`: every (x, y)
+# with x before y, as (id_a, id_b) structs.
+_PAIR_STRUCTS_SQL = (
+    "flatten(transform(ids, (x, i) -> transform("
+    "slice(ids, i + 2, size(ids)), y -> struct(x AS id_a, y AS id_b))))"
+)
 
 
 def minhash_coeffs(num_hashes: int = 16) -> list[tuple[int, int]]:
@@ -65,10 +89,10 @@ def exact_dedup(
     )
 
 
-def shingles_from_tokens(tokens_col: Column | str, n: int = 3) -> Column:
-    """Distinct n-word shingles from a tokens column (O(n) slice-zip form)."""
-    w = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    return F.array_distinct(ngrams(w, n))
+def shingles_from_tokens(tokens_col: str, n: int = 3) -> Column:
+    """Distinct n-word shingles of the token-array column `tokens_col`
+    (O(n) slice-zip form, one parsed expression)."""
+    return F.expr(f"array_distinct({ngrams_sql(sql_ident(tokens_col), n)})")
 
 
 def shingles_df(
@@ -88,29 +112,27 @@ def shingles_df(
     )
 
 
-def _minhash_fold(hash_array: Column, num_hashes: int) -> Column:
-    """Fold a shingle-hash array into a struct of k running affine-
-    permutation mins — the signature kernel of minhash_signatures.
-    NULL/empty arrays fold to the MINHASH_PRIME sentinel init."""
+def _minhash_sig_sql(sh_sql: str, num_hashes: int) -> str:
+    """SQL text of the signature kernel of minhash_signatures: each
+    shingle of the array `sh_sql` hashed once (first 8 md5 hex digits
+    as a 32-bit int), folded into a struct of k running affine-
+    permutation mins. NULL/empty arrays fold to the MINHASH_PRIME
+    sentinel init."""
     coeffs = minhash_coeffs(num_hashes)
-    init = F.struct(
-        *[
-            F.lit(MINHASH_PRIME).cast("long").alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ]
+    hashes = (
+        f"transform({sh_sql}, "
+        "s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"
     )
-    return F.aggregate(
-        F.coalesce(hash_array, F.array().cast("array<long>")),
-        init,
-        lambda acc, hv: F.struct(
-            *[
-                F.least(
-                    acc[f"mh_{i}"],
-                    (F.lit(a) * hv + F.lit(b)) % F.lit(MINHASH_PRIME),
-                ).alias(f"mh_{i}")
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        ),
+    init = ", ".join(
+        f"CAST({MINHASH_PRIME} AS BIGINT) AS mh_{i}" for i in range(num_hashes)
+    )
+    step = ", ".join(
+        f"least(acc.mh_{i}, ({a} * hv + {b}) % {MINHASH_PRIME}) AS mh_{i}"
+        for i, (a, b) in enumerate(coeffs)
+    )
+    return (
+        f"aggregate(coalesce({hashes}, CAST(array() AS ARRAY<BIGINT>)), "
+        f"struct({init}), (acc, hv) -> struct({step}))"
     )
 
 
@@ -130,7 +152,7 @@ def minhash_signatures(
     (shingles_df keeps one row per doc), so the signature is a pure
     projection — one md5 per shingle → 32-bit int → k affine
     permutations folded into a running-min struct within the row
-    (`F.aggregate`; min is order-independent so the result is
+    (`aggregate`; min is order-independent so the result is
     bit-identical to a hash aggregate). The r1-r3 shape (explode →
     k-column min groupBy → restore join) shuffled the whole (id, hash)
     relation and rescanned df for empty docs; docs with no shingles now
@@ -163,27 +185,25 @@ def minhash_signatures(
     left-joined back to df and emitted sentinel rows for them). Every
     in-repo caller passes the full shingles_df; a caller that filters
     the relation must re-join against df itself if it needs the
-    one-row-per-doc guarantee."""
+    one-row-per-doc guarantee.
+
+    Construction: the hash, the k-way fold and the k-field split are
+    each ONE parsed SQL string (_minhash_sig_sql, `_sig.*`), not a
+    Python loop of Column calls — each DSL call is a py4j round trip,
+    and the 16-way fold and split cost ~780 of them per signing.
+    Parsed and DSL forms analyze to the same plan (pinned by
+    test_minhash_sql_text_equals_dsl_construction)."""
+    check_lsh_params(num_hashes)
     rel = (
         shingles
         if shingles is not None
         else shingles_df(df, text_col, id_col, shingle_n, keep_cols)
     )
-    h = F.transform(
-        F.col("sh"),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
     with_sig = rel.select(
-        F.col(id_col), *keep_cols, _minhash_fold(h, num_hashes).alias("_sig")
+        id_col, *keep_cols,
+        F.expr(_minhash_sig_sql("sh", num_hashes) + " AS _sig"),
     )
-    return with_sig.select(
-        F.col(id_col),
-        *keep_cols,
-        *[
-            F.col("_sig").getField(f"mh_{i}").alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ],
-    )
+    return with_sig.select(id_col, *keep_cols, "_sig.*")
 
 
 def lsh_band_rows(
@@ -200,28 +220,19 @@ def lsh_band_rows(
     event-time column a streaming caller's watermark needs) — this is
     the ONE implementation of the banding scheme; the streaming probe
     and the persisted index must never diverge from it."""
+    check_lsh_params(num_hashes, bands)
     rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [
-            F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *parts)).alias("bh"),
-            )
+    band_structs = ", ".join(
+        f"struct({b} AS band, md5(concat_ws('|', "
+        + ", ".join(
+            f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
         )
-    return sigs.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        F.explode(F.array(*band_cols)).alias("bb"),
-    ).select(
-        id_col,
-        *keep_cols,
-        F.col("bb.band").alias("band"),
-        F.col("bb.bh").alias("bh"),
+        + ")) AS bh)"
+        for b in range(bands)
     )
+    return sigs.select(
+        id_col, *keep_cols, F.expr(f"explode(array({band_structs})) AS bb")
+    ).select(id_col, *keep_cols, "bb.*")
 
 
 def minhash_band_pairs(
@@ -237,25 +248,16 @@ def minhash_band_pairs(
     once (a self-join would recompute it per side). At 100 TB a pathological
     bucket (e.g. boilerplate shingles) shows up as skew here; cap it upstream
     by filtering ultra-common shingles before signing if needed."""
+    check_lsh_params(num_hashes, bands)
     exploded = lsh_band_rows(sigs, id_col, num_hashes, bands)
     buckets = (
         exploded.groupBy("band", "bh")
         .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    ids = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
+        buckets.select(F.expr(f"explode({_PAIR_STRUCTS_SQL}) AS p"))
+        .select("p.*")
         .distinct()
     )
 
@@ -308,34 +310,24 @@ def jaccard_verify(
         # callers pass a persisted relation already)
         else track(shingles_df(df, text_col, id_col, shingle_n).persist())
     )
-    sh_a = rel.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("_sh_a")
-    )
-    sh_b = rel.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("_sh_b")
-    )
-    n_inter = F.coalesce(
-        F.size(F.array_intersect("_sh_a", "_sh_b")), F.lit(0)
-    )
+    sh_a = rel.selectExpr(f"{sql_ident(id_col)} AS id_a", "sh AS _sh_a")
+    sh_b = rel.selectExpr(f"{sql_ident(id_col)} AS id_b", "sh AS _sh_b")
+    n_inter = "coalesce(size(array_intersect(_sh_a, _sh_b)), 0)"
     out = (
         pairs.join(sh_a, "id_a")
         .join(sh_b, "id_b")
         .select(
             "id_a",
             "id_b",
-            F.round(
-                n_inter
-                / F.greatest(
-                    F.size("_sh_a") + F.size("_sh_b") - n_inter,
-                    F.lit(1),
-                ),
-                6,
-            ).alias("jaccard"),
+            F.expr(
+                f"round({n_inter} / greatest(size(_sh_a) + size(_sh_b) - "
+                f"{n_inter}, 1), 6) AS jaccard"
+            ),
         )
     )
     if min_jaccard > 0:
-        return out.filter(F.col("jaccard") >= min_jaccard)
-    return out.filter(F.col("jaccard") > 0)
+        return out.filter(f"jaccard >= {sql_num(min_jaccard)}")
+    return out.filter("jaccard > 0")
 
 
 def minhash_index_write(
@@ -352,6 +344,7 @@ def minhash_index_write(
     index instead of re-signing the corpus (at 100 TB, re-signing is a
     full scan; the index is ~bands rows × ~50 B per doc, appended per
     ingest batch with the same coefficients)."""
+    check_lsh_params(num_hashes, bands)
     rows = lsh_band_rows(
         minhash_signatures(df, text_col, id_col, num_hashes, shingle_n),
         id_col,
@@ -376,6 +369,7 @@ def minhash_index_append(
     the next batch sees them. Same parameters as the original
     minhash_index_write (the coefficients are deterministic, so appended
     rows are comparable by construction). Partition layout preserved."""
+    check_lsh_params(num_hashes, bands)
     rows = lsh_band_rows(
         minhash_signatures(df, text_col, id_col, num_hashes, shingle_n),
         id_col,
@@ -416,23 +410,19 @@ def incremental_dedup_pairs(
 
     The index must have been built with the same num_hashes/bands/
     shingle_n/coefficients (minhash_coeffs is deterministic)."""
+    check_lsh_params(num_hashes, bands)
+    idc = sql_ident(id_col)
     batch_rows = lsh_band_rows(
         minhash_signatures(batch, text_col, id_col, num_hashes, shingle_n),
         id_col,
         num_hashes,
         bands,
-    ).select(
-        F.col(id_col).alias("id_new"), "band", "bh"
-    )
-    idx_rows = index_bands.select(
-        F.col(id_col).alias("id_idx"), "band", "bh"
-    )
+    ).selectExpr(f"{idc} AS id_new", "band", "bh")
+    idx_rows = index_bands.selectExpr(f"{idc} AS id_idx", "band", "bh")
     cand = (
         batch_rows.join(idx_rows, ["band", "bh"])
-        .filter(F.col("id_new") != F.col("id_idx"))
-        .select(
-            F.col("id_new").alias("id_a"), F.col("id_idx").alias("id_b")
-        )
+        .filter("id_new != id_idx")
+        .selectExpr("id_new AS id_a", "id_idx AS id_b")
         .distinct()
     )
     # no .persist() here: jaccard_verify persists the pair relation it
@@ -441,7 +431,7 @@ def incremental_dedup_pairs(
     # corpus-wide distinct here would be a 100 TB shuffle; after the
     # semi-join both sides are candidate-sized. dropDuplicates(id) then
     # tolerates callers whose batch overlaps the corpus relation.
-    idx_ids = cand.select(F.col("id_b").alias(id_col)).distinct()
+    idx_ids = cand.selectExpr(f"id_b AS {idc}").distinct()
     corpus_cand = corpus.select(id_col, text_col).join(
         idx_ids, id_col, "left_semi"
     )
@@ -450,11 +440,7 @@ def incremental_dedup_pairs(
     ).dropDuplicates([id_col])
     return jaccard_verify(
         both, cand, text_col, id_col, shingle_n, min_jaccard
-    ).select(
-        F.col("id_a").alias("id_new"),
-        F.col("id_b").alias("id_idx"),
-        "jaccard",
-    )
+    ).selectExpr("id_a AS id_new", "id_b AS id_idx", "jaccard")
 
 
 def ngram_jaccard_pairs(
@@ -505,19 +491,9 @@ def ngram_jaccard_pairs(
     )
     if max_df is not None:
         postings = postings.filter(F.size("ids") <= max_df)
-    ids = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     # a pair occurs once per shared shingle → count(*) == |A ∩ B|
     inter = (
-        postings.select(F.explode(pair_structs).alias("p"))
+        postings.select(F.expr(f"explode({_PAIR_STRUCTS_SQL}) AS p"))
         .groupBy("p.id_a", "p.id_b")
         .agg(F.count("*").alias("n_inter"))
     )

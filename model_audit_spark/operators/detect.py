@@ -14,6 +14,12 @@ Semantics mirror reference methods/style.py:241-339:
         + struct(+0.05 per matching flag the text exhibits, -0.02 mismatch)
         + 0.10 * refusal_hit_ratio (only when the text has a refusal hint)
   rounded to 4 decimals; argmax ties resolve to catalog order (family_rank).
+
+Construction: the 12 family scores (marker loops included) are SQL TEXT
+parsed in one call (_family_score_sql), not Python loops of Column
+calls — each DSL call is a py4j round trip, and the loop form cost
+~2.5k of them per detect. Parsed and DSL forms analyze to the same
+plan (pinned by tests/test_sql_construction.py via sameResult).
 """
 
 from __future__ import annotations
@@ -22,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from model_audit_spark.functions.text import style_flag_columns, text_preview
+from model_audit_spark.operators.similarity import sql_ident, sql_str
 
 
 def style_scores(
@@ -32,7 +39,7 @@ def style_scores(
 ) -> DataFrame:
     """Long-format (id, family, family_rank, score) — one row per text × family.
 
-    Built by exploding the per-row score-entry array (style_score_entries):
+    Built by exploding the per-row score-entry array (_score_entries_sql):
     the flag columns are evaluated once per TEXT, not once per text×family
     — measured 5× faster on the sf0.1 corpus than joining the texts with
     the 12-row signature table.
@@ -43,132 +50,122 @@ def style_scores(
     measured 3.6× slower at sf0.1)."""
     base, refs = flag_base(df, text_col, [F.col(id_col)])
     return base.select(
-        F.col(id_col),
-        F.explode(style_score_entries(text_col, refs)).alias("e"),
-    ).select(id_col, "e.family", "e.family_rank", "e.score")
+        id_col, F.expr(f"explode({_score_entries_sql(refs)}) AS e")
+    ).select(id_col, "e.*")
 
 
 def flag_base(
     df: DataFrame, text_col: str, keep: list
-) -> tuple[DataFrame, dict]:
+) -> tuple[DataFrame, dict[str, str]]:
     """Stage-1 projection for two-stage detection: evaluate the shared
     per-text flag expressions ONCE as real columns (`_sf_*`), return
-    (projected df, {flag_name: column ref}).
+    (projected df, {flag_name: SQL reference to its column}).
 
-    The refs feed _family_score_exprs/style_score_entries/detection_columns
+    The refs feed the family scores (style_scores, detection_columns),
     so the stage-2 expression tree stays ~10x smaller than the inlined
-    form — small enough for whole-stage codegen. CollapseProject will not
-    re-inline them: each flag is referenced 12x (once per family) and the
-    rule only collapses aliases that are cheap or used once. Both stages
-    are narrow projections — streaming-safe, still zero-shuffle."""
+    form — small enough for whole-stage codegen. CollapseProject will
+    not re-inline them: each flag is referenced 12x (once per family)
+    and the rule only collapses aliases that are cheap or used once.
+    Both stages are narrow projections — streaming-safe, still
+    zero-shuffle."""
     flag_exprs = style_flag_columns(text_col)
     base = df.select(
         *keep, *[c.alias(f"_sf_{n}") for n, c in flag_exprs.items()]
     )
-    refs = {n: F.col(f"_sf_{n}") for n in flag_exprs}
+    refs = {n: sql_ident(f"_sf_{n}") for n in flag_exprs}
     return base, refs
 
 
-def _family_score_exprs(
-    text_col: str = "text", flags: dict | None = None
-) -> list[tuple[str, int, "F.Column"]]:
-    """(family, rank, score Column) per catalog family — the per-row score
-    expressions shared by detection_columns and style_scores. Literal-
-    parameterized, no cross join.
+def _hits_sql(lower: str, needles: list[str]) -> str:
+    """SQL text of the number of `needles` contained in `lower`."""
+    return (
+        "("
+        + " + ".join(
+            ["0"]
+            + [f"CAST(contains({lower}, {sql_str(n)}) AS INT)" for n in needles]
+        )
+        + ")"
+    )
 
-    With flags=None the flag subexpressions are inlined per family (single-
-    projection form, needed where the caller can only emit ONE select).
-    Passing precomputed flag *column references* instead shrinks the
-    combined 12-family expression ~10x, which keeps the generated Java
-    under janino's 64KB method limit so whole-stage codegen stays ON
-    (the inlined form trips `WholeStageCodegenExec` fallback on the
-    explode path)."""
+
+def _family_score_sql(flags: dict[str, str]) -> list[tuple[str, int, str]]:
+    """(family, rank, score SQL text) per catalog family — the per-row
+    score expressions shared by detection_columns and style_scores,
+    over the flag_base column references. Literal-parameterized, no
+    cross join."""
     from model_audit_spark.catalogs import STYLE_SIGNATURES
 
-    if flags is None:
-        flags = style_flag_columns(text_col)
     lower = flags["text_lower"]
     lang = flags["text_lang"]
+
+    def _term(flag: str, tends: bool) -> str:
+        w = "0.05D" if tends else "-0.02D"
+        return f"CASE WHEN {flags[flag]} THEN {w} ELSE 0.0D END"
 
     out = []
     for rank, (fam, markers, refusals, md, num, code, verb, sig_lang) in (
         enumerate(STYLE_SIGNATURES)
     ):
+        sl = sql_str(sig_lang)
         lang_score = (
-            F.when(lang == sig_lang, 0.20)
-            .when(F.lit(sig_lang) == "both", 0.10)
-            .otherwise(0.0)
+            f"CASE WHEN {lang} = {sl} THEN 0.2D "
+            f"WHEN {sl} = 'both' THEN 0.1D ELSE 0.0D END"
         )
-        marker_hits = sum(
-            (lower.contains(m).cast("int") for m in markers), F.lit(0)
+        marker_score = f"least({_hits_sql(lower, markers)} / 3.0D, 1.0D) * 0.5D"
+        struct_score = " + ".join([
+            _term("has_md", md),
+            _term("has_numbered", num),
+            _term("has_code_blocks", code),
+            _term("is_verbose", verb),
+        ])
+        refusal_score = (
+            f"CASE WHEN {flags['has_refusal_hint']} THEN "
+            f"{_hits_sql(lower, refusals)} / {max(len(refusals), 1)} * 0.1D "
+            "ELSE 0.0D END"
         )
-        marker_score = F.least(marker_hits / 3.0, F.lit(1.0)) * 0.50
-
-        def _term(has, tends: bool):
-            if tends:
-                return F.when(has, 0.05).otherwise(0.0)
-            return F.when(has, -0.02).otherwise(0.0)
-
-        struct_score = (
-            _term(flags["has_md"], md)
-            + _term(flags["has_numbered"], num)
-            + _term(flags["has_code_blocks"], code)
-            + _term(flags["is_verbose"], verb)
-        )
-        refusal_hits = sum(
-            (lower.contains(p).cast("int") for p in refusals), F.lit(0)
-        )
-        refusal_score = F.when(
-            flags["has_refusal_hint"],
-            refusal_hits / max(len(refusals), 1) * 0.10,
-        ).otherwise(0.0)
-        score = F.round(
-            lang_score + marker_score + struct_score + refusal_score, 4
+        score = (
+            f"round({lang_score} + {marker_score} + ({struct_score}) + "
+            f"{refusal_score}, 4)"
         )
         out.append((fam, rank, score))
     return out
 
 
-def style_score_entries(
-    text_col: str = "text", flags: dict | None = None
-) -> "F.Column":
-    """All 12 family scores for one row as an array of structs
-    (family, family_rank, score). Built once per row by the generator —
-    never a per-element lambda over a shared subtree."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(fam).alias("family"),
-                F.lit(rank).alias("family_rank"),
-                score.alias("score"),
-            )
-            for fam, rank, score in _family_score_exprs(text_col, flags)
-        ]
+def _score_entries_sql(flags: dict[str, str]) -> str:
+    """SQL text of all 12 family scores for one row as an array of
+    structs (family, family_rank, score), over flag_base's column
+    references. Built once per row by the generator — never a
+    per-element lambda over a shared subtree."""
+    return (
+        "array("
+        + ", ".join(
+            f"struct({sql_str(fam)} AS family, {rank} AS family_rank, "
+            f"{score} AS score)"
+            for fam, rank, score in _family_score_sql(flags)
+        )
+        + ")"
     )
 
 
-def detection_columns(
-    text_col: str = "text", flags: dict | None = None
-) -> dict[str, "F.Column"]:
-    """Per-ROW detection: argmax via array_max over (score, -rank, family)
-    structs built DIRECTLY from the score expressions (a transform over
-    style_score_entries would double the expression tree and codegen cost).
+def detection_columns(flags: dict[str, str]) -> dict[str, "F.Column"]:
+    """Per-ROW detection over flag_base's column references: argmax via
+    array_max over (score, -rank, family) structs built DIRECTLY from
+    the score expressions (a transform over the score-entry array would
+    double the expression tree and codegen cost). The argmax is parsed
+    once; both outputs are fields of that one Column.
 
     No cross join, no aggregate, no shuffle — a pure projection, so it runs
     identically in batch and Structured Streaming and keeps whole-stage
     codegen. Semantics match style_scores/detect exactly (same formula,
     same catalog-order tie-break)."""
-    best = F.array_max(
-        F.array(
-            *[
-                F.struct(
-                    score.alias("score"),
-                    F.lit(-rank).alias("neg_rank"),
-                    F.lit(fam).alias("family"),
-                )
-                for fam, rank, score in _family_score_exprs(text_col, flags)
-            ]
+    best = F.expr(
+        "array_max(array("
+        + ", ".join(
+            f"struct({score} AS score, {-rank} AS neg_rank, "
+            f"{sql_str(fam)} AS family)"
+            for fam, rank, score in _family_score_sql(flags)
         )
+        + "))"
     )
     return {
         "predicted_model": best["family"],
@@ -208,7 +205,7 @@ def detect(
         df, text_col,
         [F.col(id_col), text_preview(text_col).alias("text_preview")],
     )
-    cols = detection_columns(text_col, refs)
+    cols = detection_columns(refs)
     return base.select(
         F.col(id_col),
         "text_preview",
@@ -219,16 +216,13 @@ def detect(
 
 def detection_distribution(detections: DataFrame) -> DataFrame:
     """Source distribution (A5): counts + percentage per predicted family."""
-    from pyspark.sql import Window
-
-    total = F.sum("n_texts").over(Window.partitionBy())
     return (
         detections.groupBy("predicted_model")
-        .agg(F.count("*").alias("n_texts"))
-        .select(
+        .agg(F.expr("count(*) AS n_texts"))
+        .selectExpr(
             "predicted_model",
             "n_texts",
-            F.round(F.col("n_texts") / total * 100.0, 2).alias("pct"),
+            "round(n_texts / sum(n_texts) OVER () * 100.0D, 2) AS pct",
         )
         .orderBy(F.desc("n_texts"), "predicted_model")
     )

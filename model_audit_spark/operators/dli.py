@@ -72,7 +72,7 @@ def bigram_distribution(
         bgpos = toks.select(
             group_col,
             "_ord",
-            F.posexplode(bigrams(F.col("w"))).alias("pos", "ngram"),
+            F.posexplode(bigrams("w")).alias("pos", "ngram"),
         )
         packed = F.col("_ord").cast("long") * _POS_CAP + F.least(
             F.col("pos"), F.lit(_POS_CAP - 1)
@@ -95,7 +95,7 @@ def bigram_distribution(
             (F.col("cnt") / F.sum("cnt").over(w_group)).alias("weight"),
         )
     exploded = toks.select(
-        group_col, F.explode(bigrams(F.col("w"))).alias("ngram")
+        group_col, F.explode(bigrams("w")).alias("ngram")
     )
     counts = exploded.groupBy(group_col, "ngram").agg(F.count("*").alias("cnt"))
     w_rank = Window.partitionBy(group_col).orderBy(
@@ -121,7 +121,7 @@ def behavior_features(
     lo = F.lower(c)
     resp = df.select(
         F.col(group_col),
-        dli_refusal_flag(c).cast("double").alias("is_refusal"),
+        dli_refusal_flag(text_col).cast("double").alias("is_refusal"),
         F.size(words(c)).cast("double").alias("n_ws_words"),
         c.rlike(r"(?m)^#+\s").cast("double").alias("is_md"),
         c.rlike(r"(?m)^[\s]*[-*•]\s").cast("double").alias("is_list"),

@@ -15,6 +15,8 @@ All arithmetic is in double; embeddings cast from float32 once.
 
 from __future__ import annotations
 
+import numbers
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -22,6 +24,15 @@ from pyspark.sql import functions as F
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
+def _dot_sql(a_sql: str, b_sql: str) -> str:
+    """SQL text of _dot over two ARRAY<DOUBLE> values, for one-string
+    builders (the same zip_with + aggregate, summed in element order)."""
+    return (
+        f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y), 0.0D, "
+        "(acc, v) -> acc + v)"
     )
 
 
@@ -57,6 +68,35 @@ def _dlit2_sql(rows) -> str:
 def dlit2(rows) -> Column:
     """ARRAY<ARRAY<DOUBLE>> literal parsed from ONE SQL string (dlit)."""
     return F.expr(_dlit2_sql(rows))
+
+
+# quote, backslash and dollar go in as \uXXXX escapes: the parser's
+# unescaping restores them, and `${` never reaches variable substitution
+_SQL_STR_ESCAPES = {ord(ch): f"\\u{ord(ch):04x}" for ch in "'\\$"}
+
+
+def sql_str(s: str) -> str:
+    """SQL text of a STRING literal equal to `s` — the quoting every
+    one-string expression builder uses for catalog text (markers with
+    apostrophes, CJK hints). `F.expr(sql_str(s))` analyzes to the same
+    Literal as `F.lit(s)` for any text (property-tested)."""
+    return "'" + s.translate(_SQL_STR_ESCAPES) + "'"
+
+
+def sql_num(v: int | float) -> str:
+    """SQL text of a numeric literal of the same type as `F.lit(v)`:
+    INT/BIGINT for a Python int, DOUBLE (the `D` suffix, dlit's repr()
+    discipline) for a float."""
+    if isinstance(v, bool) or not isinstance(v, numbers.Real):
+        raise TypeError(f"sql_num: not a number: {v!r}")
+    if isinstance(v, numbers.Integral):
+        return repr(int(v))
+    return f"{float(v)!r}D"
+
+
+def sql_ident(name: str) -> str:
+    """SQL text of a column reference to `name` (backtick-quoted)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _norm(a: Column) -> Column:
@@ -1769,53 +1809,36 @@ def ivf_sq8_index_probe_many(
     codes = spark.read.parquet(f"{path}/codes").withColumn(
         "cluster", F.col("cluster").cast("int")
     )
-    scored_cells = queries.crossJoin(F.broadcast(cdf)).select(
-        qid_col,
-        "qv",
-        "cid",
-        (_dot(F.col("qv"), F.col("cv")) / F.col("cn")).alias("s"),
+    qid, vid = sql_ident(qid_col), sql_ident(id_col)
+    scored_cells = queries.crossJoin(F.broadcast(cdf)).selectExpr(
+        qid, "qv", "cid", f"{_dot_sql('qv', 'cv')} / cn AS s"
     )
-    wq = Window.partitionBy(qid_col).orderBy(F.desc("s"), F.asc("cid"))
     cells = (
-        scored_cells.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select(qid_col, "qv", "cid")
+        scored_cells.withColumn("_rn", F.expr(
+            f"row_number() OVER (PARTITION BY {qid} "
+            "ORDER BY s DESC NULLS LAST, cid ASC NULLS FIRST)"
+        ))
+        .filter(f"_rn <= {int(nprobe)}")
+        .selectExpr(qid, "qv", "cid")
     )
-    qprep = cells.crossJoin(F.broadcast(params)).select(
-        qid_col,
+    qprep = cells.crossJoin(F.broadcast(params)).selectExpr(
+        qid,
         "cid",
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("mns"), lambda qv, mn: qv * mn),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("qconst"),
-        F.zip_with(
-            F.col("qv"), F.col("rgs"), lambda qv, rg: qv * rg / 255.0
-        ).alias("qscale"),
+        f"{_dot_sql('qv', 'mns')} AS qconst",
+        "zip_with(qv, rgs, (q, r) -> q * r / 255.0D) AS qscale",
     )
-    joined = codes.join(
-        F.broadcast(qprep), F.col("cluster") == F.col("cid")
-    )
-    score = F.col("qconst") + F.aggregate(
-        F.zip_with(
-            F.col("qscale"),
-            F.col("codes"),
-            lambda s, c: s * c.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wk = Window.partitionBy(qid_col).orderBy(
-        F.desc("approx_dot"), F.asc(id_col)
+    joined = codes.join(F.broadcast(qprep), F.expr("cluster = cid"))
+    score = (
+        "qconst + aggregate(zip_with(qscale, codes, "
+        "(s, c) -> s * CAST(c AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
     )
     return (
-        joined.select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.round(score, 6).alias("approx_dot"),
-        )
-        .withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
+        joined.selectExpr(qid, vid, f"round({score}, 6) AS approx_dot")
+        .withColumn("_rk", F.expr(
+            f"row_number() OVER (PARTITION BY {qid} "
+            f"ORDER BY approx_dot DESC NULLS LAST, {vid} ASC NULLS FIRST)"
+        ))
+        .filter(f"_rk <= {int(k)}")
         .drop("_rk")
         .orderBy(qid_col, F.desc("approx_dot"), F.asc(id_col))
     )

@@ -20,6 +20,7 @@ from model_audit_spark.functions.text import (
     words,
 )
 from model_audit_spark.operators.dedup import shingles_from_tokens
+from model_audit_spark.operators.similarity import sql_ident, sql_str
 from model_audit_spark.persistence import track
 
 # A GPT2-ish byte-pair-encoding pre-tokenizer approximation: contractions,
@@ -32,6 +33,7 @@ STOPWORDS = [
     "with", "at", "by", "from", "is", "are", "was", "were", "be", "it",
     "this", "that", "as", "not", "no",
 ]
+_STOP_SQL = ", ".join(sql_str(w) for w in STOPWORDS)
 
 
 def token_count_ws(text_col: Column | str) -> Column:
@@ -43,49 +45,6 @@ def token_count_bpe(text_col: Column | str) -> Column:
     """BPE-ish token count via regexp matches (proxy for LLM token cost)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.regexp_count(c, F.lit(BPE_PATTERN))
-
-
-def doc_stat_columns(text_col: str = "text") -> dict[str, "Column"]:
-    """The doc_stats output expressions as an ordered {name: Column} dict —
-    reusable by any single-pass projection (doc_stats, curate_corpus)."""
-    c = F.col(text_col)
-    toks = word_tokens(c)
-    n_words = F.size(words(c))
-    n_toks = F.size(toks)
-    tot = F.greatest(n_toks, F.lit(1))
-    stop_hits = F.size(
-        F.filter(toks, lambda t: t.isin(STOPWORDS))
-    )
-    mean_wlen = F.length(F.array_join(toks, "")) / tot
-    punct_ratio = (
-        F.length(c) - F.length(F.translate(c, ".,;:!?", ""))
-    ) / F.greatest(F.length(c), F.lit(1))
-    stop_ratio = stop_hits / tot
-
-    len_score = F.least(
-        F.greatest((n_words - 20) / 80.0, F.lit(0.0)), F.lit(1.0)
-    )
-    stop_score = F.least(stop_ratio / 0.3, F.lit(1.0))
-    wlen_score = F.when(
-        (mean_wlen >= 3.0) & (mean_wlen <= 8.0), 1.0
-    ).otherwise(0.0)
-    punct_score = F.when(punct_ratio <= 0.1, 1.0).otherwise(0.0)
-    quality = F.round(
-        0.25 * len_score + 0.25 * stop_score + 0.25 * wlen_score
-        + 0.25 * punct_score,
-        6,
-    )
-    return {
-        "n_chars": F.length(c),
-        "n_words": n_words,
-        "n_tokens": n_toks,
-        "n_bpe_tokens": token_count_bpe(c),
-        "mean_word_len": F.round(mean_wlen, 6),
-        "punct_ratio": F.round(punct_ratio, 6),
-        "stopword_ratio": F.round(stop_ratio, 6),
-        "quality_score": quality,
-        "lang_pred": detect_lang(c),
-    }
 
 
 DOC_STAT_NAMES = (
@@ -109,12 +68,11 @@ def with_doc_stats(
     """Append the requested doc-stat columns, single-tokenization — the
     watermark-fusion discipline (functions/text.with_watermark_signals).
 
-    Same arithmetic and values column-for-column as doc_stat_columns(),
-    but fused: the dict form embeds the word_tokens() regexp tokenizer
-    inside several lambda-bearing trees (stop_hits' filter, mean_wlen's
-    array_join), and Spark's subexpression elimination SKIPS expressions
+    Fused: inlining the word_tokens() regexp tokenizer into several
+    lambda-bearing trees (stop_hits' filter, mean_wlen's array_join)
+    defeats Spark's subexpression elimination, which SKIPS expressions
     containing LambdaVariables, so one quality_score evaluation
-    re-tokenizes the text up to 4x per row (the measured exp-0.79
+    re-tokenized the text up to 4x per row (the measured exp-0.79
     per-row constant on the Heaps/Zipf 100x tier, SCALE.md r10). Here
     each non-cheap producer (token array, whitespace-word array, the
     stopword-hit count, the joined-length, the punct ratio) is
@@ -122,7 +80,9 @@ def with_doc_stats(
     CollapseProject keeps a multiply-referenced non-cheap alias as a
     stage-local value computed once, all inside one WholeStageCodegen —
     no shuffle, no extra pass. Only the producers the requested `names`
-    actually need are staged.
+    actually need are staged. The per-stat arithmetic is SQL text parsed
+    once per column (one py4j call each instead of a DSL call per
+    operator).
     """
     names = list(DOC_STAT_NAMES) if names is None else list(names)
     unknown = set(names) - set(DOC_STAT_NAMES)
@@ -138,6 +98,7 @@ def with_doc_stats(
         )
     need = set(names)
     c = F.col(text_col)
+    t = sql_ident(text_col)
     out = df
     stage1: dict[str, Column] = {}
     need_toks = need & {
@@ -151,63 +112,48 @@ def with_doc_stats(
     if stage1:
         out = out.withColumns(stage1)
 
-    stage2: dict[str, Column] = {}
+    stage2: dict[str, str] = {}
     if need_toks:
-        stage2["_ds_nt"] = F.size(F.col("_ds_t"))
+        stage2["_ds_nt"] = "size(_ds_t)"
         if need & {"stopword_ratio", "quality_score"}:
-            stage2["_ds_sh"] = F.size(
-                F.filter(F.col("_ds_t"), lambda t: t.isin(STOPWORDS))
-            )
+            stage2["_ds_sh"] = f"size(filter(_ds_t, w -> w IN ({_STOP_SQL})))"
         if need & {"mean_word_len", "quality_score"}:
-            stage2["_ds_jl"] = F.length(F.array_join(F.col("_ds_t"), ""))
+            stage2["_ds_jl"] = "length(array_join(_ds_t, ''))"
     if need_words:
-        stage2["_ds_nw"] = F.size(F.col("_ds_w"))
+        stage2["_ds_nw"] = "size(_ds_w)"
     if need & {"punct_ratio", "quality_score"}:
         stage2["_ds_pr"] = (
-            F.length(c) - F.length(F.translate(c, ".,;:!?", ""))
-        ) / F.greatest(F.length(c), F.lit(1))
+            f"(length({t}) - length(translate({t}, '.,;:!?', ''))) "
+            f"/ greatest(length({t}), 1)"
+        )
     if stage2:
-        out = out.withColumns(stage2)
+        out = out.withColumns({k: F.expr(v) for k, v in stage2.items()})
 
-    tot = F.greatest(F.col("_ds_nt"), F.lit(1)) if need_toks else None
+    tot = "greatest(_ds_nt, 1)"
+    mean_wlen = f"_ds_jl / {tot}"
+    stat_sql = {
+        "n_chars": f"length({t})",
+        "n_words": "_ds_nw",
+        "n_tokens": "_ds_nt",
+        "mean_word_len": f"round({mean_wlen}, 6)",
+        "punct_ratio": "round(_ds_pr, 6)",
+        "stopword_ratio": f"round(_ds_sh / {tot}, 6)",
+        "quality_score": (
+            "round(least(greatest((_ds_nw - 20) / 80.0D, 0.0D), 1.0D) * 0.25D"
+            f" + least(_ds_sh / {tot} / 0.3D, 1.0D) * 0.25D"
+            f" + CASE WHEN {mean_wlen} >= 3.0D AND {mean_wlen} <= 8.0D"
+            " THEN 1.0D ELSE 0.0D END * 0.25D"
+            " + CASE WHEN _ds_pr <= 0.1D THEN 1.0D ELSE 0.0D END * 0.25D, 6)"
+        ),
+    }
     final: dict[str, Column] = {}
     for name in names:
-        if name == "n_chars":
-            final[name] = F.length(c)
-        elif name == "n_words":
-            final[name] = F.col("_ds_nw")
-        elif name == "n_tokens":
-            final[name] = F.col("_ds_nt")
-        elif name == "n_bpe_tokens":
+        if name == "n_bpe_tokens":
             final[name] = token_count_bpe(c)
-        elif name == "mean_word_len":
-            final[name] = F.round(F.col("_ds_jl") / tot, 6)
-        elif name == "punct_ratio":
-            final[name] = F.round(F.col("_ds_pr"), 6)
-        elif name == "stopword_ratio":
-            final[name] = F.round(F.col("_ds_sh") / tot, 6)
-        elif name == "quality_score":
-            len_score = F.least(
-                F.greatest((F.col("_ds_nw") - 20) / 80.0, F.lit(0.0)),
-                F.lit(1.0),
-            )
-            stop_score = F.least(
-                (F.col("_ds_sh") / tot) / 0.3, F.lit(1.0)
-            )
-            mean_wlen = F.col("_ds_jl") / tot
-            wlen_score = F.when(
-                (mean_wlen >= 3.0) & (mean_wlen <= 8.0), 1.0
-            ).otherwise(0.0)
-            punct_score = F.when(
-                F.col("_ds_pr") <= 0.1, 1.0
-            ).otherwise(0.0)
-            final[name] = F.round(
-                0.25 * len_score + 0.25 * stop_score
-                + 0.25 * wlen_score + 0.25 * punct_score,
-                6,
-            )
         elif name == "lang_pred":
             final[name] = detect_lang(c)
+        else:
+            final[name] = F.expr(stat_sql[name])
     return out.withColumns(final).select(*df.columns, *names)
 
 
@@ -220,8 +166,7 @@ def doc_stats(
     stopword ratio (healthy band around natural prose), mean word length in
     the 3..8 band, and punctuation sanity (<= 0.1). Deterministic, documented
     here as the engine's own quality metric (the reference has none).
-    Fused single-tokenization path (with_doc_stats); values identical to
-    the doc_stat_columns expression dict.
+    Fused single-tokenization path (with_doc_stats).
     """
     return with_doc_stats(
         df.select(F.col(id_col), F.col(text_col)), text_col
@@ -711,7 +656,7 @@ def collocations(
     )
     n_total = uni.agg(F.sum("c").cast("bigint").alias("n_tokens"))
     bi = (
-        toks.select(F.explode(ngrams(F.col("_w"), 2)).alias("bigram"))
+        toks.select(F.explode(ngrams("_w", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("c_xy"))
         .filter(F.col("c_xy") >= min_count)

@@ -47,7 +47,7 @@ def streaming_detect(
             text_preview(text_col).alias("text_preview"),
         ],
     )
-    cols = detection_columns(text_col, refs)
+    cols = detection_columns(refs)
     return base.select(
         F.col(id_col),
         *([F.col("ts")] if "ts" in stream.columns else []),
@@ -66,7 +66,7 @@ def windowed_detection_counts(
 ) -> DataFrame:
     """Tumbling-window counts per predicted family with late-data bound."""
     base, refs = flag_base(stream, text_col, [F.col(ts_col).alias("ts")])
-    cols = detection_columns(text_col, refs)
+    cols = detection_columns(refs)
     detected = base.select(
         "ts",
         cols["predicted_model"].alias("predicted_model"),
@@ -110,7 +110,7 @@ def running_source_verdict(
     base, refs = flag_base(
         stream, text_col, [F.col(source_col).alias("source")]
     )
-    cols = detection_columns(text_col, refs)
+    cols = detection_columns(refs)
     scored = base.select(
         "source",
         cols["predicted_model"].alias("predicted_model"),

@@ -82,6 +82,48 @@ def test_minhash_coeffs_bounds():
         assert 0 <= b < MINHASH_PRIME
 
 
+@pytest.mark.parametrize(
+    "num_hashes,bands", [(16, 32), (16, 0), (16, 3), (0, 1), (-4, 2)]
+)
+def test_lsh_parameters_rejected_at_entry(
+    spark, docs, tmp_path, num_hashes, bands
+):
+    """bands must split num_hashes evenly into rows_per_band >= 1: more
+    bands than hashes made every doc's band hash md5(''), bands=0 raised
+    a bare ZeroDivisionError, and an uneven split dropped hashes. Every
+    signing/banding entry point refuses such values up front."""
+    from model_audit_spark.operators.dedup import (
+        incremental_dedup_pairs,
+        lsh_band_rows,
+        minhash_index_append,
+        minhash_index_write,
+    )
+
+    sigs = minhash_signatures(docs)
+    bands_df = lsh_band_rows(sigs)
+    idx = str(tmp_path / "idx")
+    kw = {"num_hashes": num_hashes, "bands": bands}
+    entries = [
+        lambda: lsh_band_rows(sigs, **kw),
+        lambda: minhash_band_pairs(sigs, **kw),
+        lambda: minhash_index_write(docs, idx, **kw),
+        lambda: minhash_index_append(docs, idx, **kw),
+        lambda: incremental_dedup_pairs(docs, bands_df, docs, **kw),
+    ]
+    if num_hashes < 1:
+        entries.append(lambda: minhash_signatures(docs, num_hashes=num_hashes))
+    for entry in entries:
+        with pytest.raises(ValueError, match="num_hashes|bands"):
+            entry()
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(16, 1), (16, 4), (16, 16), (1, 1)])
+def test_lsh_parameters_accepted(num_hashes, bands):
+    from model_audit_spark.operators.dedup import check_lsh_params
+
+    check_lsh_params(num_hashes, bands)
+
+
 def test_minhash_signature_deterministic_and_sentinel(spark, docs):
     s1 = {r.doc_id: tuple(r)[1:] for r in minhash_signatures(docs).collect()}
     s2 = {r.doc_id: tuple(r)[1:] for r in minhash_signatures(docs).collect()}

@@ -183,10 +183,15 @@ def test_running_source_verdict_stateful_across_batches(spark, tmp_path):
             final[r.source] = r
 
     # batch-side expectation from the same expression layer
-    from model_audit_spark.operators.detect import detection_columns
+    from model_audit_spark.operators.detect import (
+        detection_columns,
+        flag_base,
+    )
 
-    union = spark.read.parquet(str(in_dir))
-    cols = detection_columns("text")
+    union, refs = flag_base(
+        spark.read.parquet(str(in_dir)), "text", [F.col("source")]
+    )
+    cols = detection_columns(refs)
     per_row = union.select(
         "source",
         cols["predicted_model"].alias("pred"),
